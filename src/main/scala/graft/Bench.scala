@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.DeserializationFeature
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{JObject, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Benchmark main: runs the query catalog on SPARK_GRAFT_SF_DIR and prints
   * ONE JSON line. Each query is fully materialized through the `noop` sink
@@ -9,33 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v,k=v": extra session confs for deliberate
-    // off-default runs — e.g. raising graft.anchor.maxRows for an
-    // INTENTIONAL exact-anchor pass at a scale the guard would refuse
-    // (the sf10 ann_recall_report measurement). Non-spark.* keys can't
-    // arrive via system properties, so the harness needs its own door.
-    // Limitation: comma is the entry separator, so values cannot contain
-    // commas. A token without '=' is a typo — fail loudly rather than
-    // throwing a bare MatchError or silently dropping the conf.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' has no '=' " +
-            "(expected k=v[,k=v...]; values cannot contain commas)")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.functions.register(spark)
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
 
     // Informational lines go to STDOUT: under sbt, stderr renders as
     // [error] and a clean bench tail full of [error] reads as a failed
@@ -241,31 +219,8 @@ object Bench {
       val f = java.nio.file.Paths.get("paired_baseline.json")
       if (!java.nio.file.Files.exists(f)) ""
       else try {
-        val txt = new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim
-        require(txt.startsWith("{") && txt.endsWith("}"), "not a JSON object")
-        // a truncated/interior-malformed file that still ends in '}' would
-        // corrupt the whole archive line when spliced verbatim — walk the
-        // bytes and require balanced braces/brackets outside strings, with
-        // the final close landing exactly at end-of-text
-        var depth = 0; var inStr = false; var esc = false; var closedAt = -1
-        var i = 0
-        while (i < txt.length) {
-          val c = txt.charAt(i)
-          if (esc) esc = false
-          else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-          else c match {
-            case '"' => inStr = true
-            case '{' | '[' => depth += 1
-            case '}' | ']' =>
-              depth -= 1
-              require(depth >= 0, s"unbalanced close at byte $i")
-              if (depth == 0 && closedAt < 0) closedAt = i
-            case _ => ()
-          }
-          i += 1
-        }
-        require(!inStr && depth == 0 && closedAt == txt.length - 1,
-          "not a single balanced JSON object")
+        val txt = jsonObject(
+          new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
         s""""paired":$txt,"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] paired section skipped: ${e.getMessage}")
@@ -310,17 +265,31 @@ object Bench {
         System.err.println(s"[bench] $path write failed: ${e.getMessage}")
       }
     writeLine(fullPath, fullLine)
-    // Per-(cpus, sf) copy of the full record: the driver's 8-core scaling
-    // leg used to clobber the 32-core map because both legs defaulted to
-    // bench_full.json (round-12 verdict "what's wrong" #2). The canonical
-    // name stays (last-writer) for existing consumers; this copy survives.
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    writeLine(s"bench_full_c${cpus}_$sfName.json", fullLine)
-    // The contract line verbatim as a fixed artifact: even if a wrapper
-    // (sbt chrome, tee, CI prefixing) mangles stdout, the identical JSON
-    // is readable here (round-12 verdict "next round" #1).
-    writeLine("BENCH_LINE.json", tailLine)
+    // A targeted run writes nothing but its own record: the two files
+    // below describe a full-catalog run.
+    if (only.isEmpty) {
+      // Per-(cpus, sf) copy of the full record, so a lower-core scaling
+      // leg never clobbers the main map. The canonical name stays
+      // (last-writer) for existing consumers; this copy survives.
+      val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
+      writeLine(s"bench_full_c${cpus}_$sfName.json", fullLine)
+      // The contract line verbatim as a fixed artifact: even if a wrapper
+      // (sbt chrome, tee, CI prefixing) mangles stdout, the identical JSON
+      // is readable here.
+      writeLine("BENCH_LINE.json", tailLine)
+    }
     println(tailLine)
     spark.stop()
   }
+
+  /** `txt`, trimmed, when it is exactly one JSON object — safe to splice
+    * verbatim into the bench line; throws with the reason otherwise (a
+    * truncated file that still ends in '}' would corrupt the whole line). */
+  private[graft] def jsonObject(txt: String): String =
+    JsonMethods.mapper.readerFor(classOf[JValue])
+      .`with`(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+      .readValue[JValue](txt) match {
+      case _: JObject => txt.trim
+      case _ => sys.error("not a JSON object")
+    }
 }

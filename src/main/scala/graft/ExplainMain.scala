@@ -1,15 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Print the formatted plan of catalog queries:
+  * `tools/jrun.sh graft.ExplainMain <sfDir> <query>...`. */
 object ExplainMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.functions.register(spark)
+    val spark = LocalSession()
     args.drop(1).foreach { name =>
       println(s"===== $name =====")
       SparkEntry.queries(name)(spark, args(0)).explain("formatted")
     }
+    spark.stop()
   }
 }

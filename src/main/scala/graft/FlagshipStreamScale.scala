@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.FlagshipStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -23,17 +22,7 @@ object FlagshipStreamScale {
     val chunks = args(1).toInt
     val work = if (args.length > 2) args(2)
       else java.nio.file.Files.createTempDirectory("flagship-scale").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.functions.register(spark)
+    val spark = LocalSession()
 
     // stage: the fact rewritten into `chunks` round-robin files (arrival
     // order deliberately unrelated to event order — the fold is

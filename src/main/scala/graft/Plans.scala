@@ -64,12 +64,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.functions.register(spark)
+    val spark = LocalSession()
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       render(spark, dir).getBytes("UTF-8"))
     println(s"[plans] wrote $out (${SparkEntry.queries.size} queries)")

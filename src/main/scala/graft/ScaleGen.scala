@@ -201,13 +201,7 @@ object ScaleGen {
     val flagship = args.length > 5 && args(5) == "flagship"
     require(!flagship || only == Set("events"),
       "flagship mode requires the table subset arg to be exactly 'events'")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     Tables.all.filter(only).foreach { name =>
       val t0 = System.nanoTime()
       val df = scaleTable(spark, srcDir, name, replicas, skewPct, flagship)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.streaming.{DwellDetector, IngestStream}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** State-store benchmark (SCALE.md "known future work"): drives the
@@ -27,18 +27,11 @@ object StreamBench {
       ".state.RocksDBStateStoreProvider"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val rowsPerBatch =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "100000").toInt
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "8").toInt
     val vehicles = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "20000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // one file per micro-batch: `vehicles` keys, ~rows/vehicles pings each,
     // event time advancing 10 min per batch so dwells cross their threshold

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import graft.streaming.{DedupMonitor, DirIndex, IvfMonitor}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger, TTLConfig}
 
@@ -68,7 +67,6 @@ object StreamSoak {
   private[graft] val StreamIdBase = 1000000000L
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val triggers = sys.env.getOrElse("SOAK_TRIGGERS", "500").toInt
     val window = 100
     val compactEvery = sys.env.getOrElse("SOAK_COMPACT_EVERY", "25").toInt
@@ -77,17 +75,9 @@ object StreamSoak {
     val deadlineSec = sys.env.getOrElse("SOAK_DEADLINE_SEC", "1200").toInt
     val killAfter = sys.env.get("SOAK_KILL_AFTER").map(_.toInt)
     val resume = sys.env.contains("SOAK_RESUME")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // transformWithState (state API v2) requires the RocksDB provider
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming" +
-          ".state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // transformWithState (state API v2) requires the RocksDB provider
+    val spark = LocalSession("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     // SOAK_ROOT persists the checkpoints + index across invocations (the
     // kill-and-resume protocol); unset = the classic one-shot temp run

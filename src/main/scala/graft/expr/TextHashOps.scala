@@ -273,34 +273,6 @@ object TextHashOps {
     new GenericArrayData(out)
   }
 
-  /** Per-doc distinct-token counts (`(t, cnt)` rows) — the n=1-only slice
-    * of [[gramCounts12]] for consumers that never touch bigrams (e.g.
-    * `curriculum_order`'s per-doc IDF mean): replaces BOTH the corpus
-    * `distinct(term, doc_id)` exchange (df = one count per emitted row)
-    * and the per-occurrence probe stream (sum(idf·cnt) over distinct
-    * rows == the occurrence sum, exact integers). */
-  def tokenCounts(toks: ArrayData): ArrayData = {
-    val len = toks.numElements()
-    val uni = new java.util.LinkedHashMap[UTF8String, Array[Long]](
-      Math.min(len, 1 << 15) * 2)
-    var i = 0
-    while (i < len) {
-      val w = toks.getUTF8String(i)
-      val u = uni.get(w)
-      if (u == null) uni.put(w, Array(1L)) else u(0) += 1L
-      i += 1
-    }
-    val out = new Array[Any](uni.size)
-    var k = 0
-    val it = uni.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      out(k) = org.apache.spark.sql.catalyst.InternalRow(e.getKey, e.getValue()(0))
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
-
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")

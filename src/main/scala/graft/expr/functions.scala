@@ -1,7 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.types._
@@ -114,11 +114,12 @@ object functions {
     * [[TextHashOps.gramStats]] for the exactness argument. */
   def gram_stats(toks: Column, n: Column): Column = {
     // fail at plan construction, not task runtime, when n is a literal
-    // outside the kernel's supported arity (ADVICE r12)
-    GraftSqlBridge.expression(n) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-        require(v == 1 || v == 2, s"gram_stats supports n=1|2, got $v")
-      case _ => () // non-literal n: the kernel's per-row require still fires
+    // outside the kernel's supported arity — judged after the int cast the
+    // kernel sees, so lit("2") and lit(2L) pass as lit(2) does (a
+    // non-literal n still meets the kernel's per-row require)
+    GraftSqlBridge.literal(n).foreach { l =>
+      val v = Cast(l, IntegerType).eval()
+      require(v == 1 || v == 2, s"gram_stats supports n=1|2, got ${l.value}")
     }
     inv(TextHashOps.getClass, ArrayType(LongType, containsNull = false),
       "gramStats", toks, n.cast("int"))
@@ -145,14 +146,6 @@ object functions {
       StructField("w2", StringType, nullable = false),
       StructField("cnt", LongType, nullable = false))), containsNull = false),
       "gramCounts2", toks)
-
-  /** Per-doc distinct-token counts `(t, cnt)` in one hash pass — the
-    * n=1-only slice of [[gram_counts12]]. */
-  def token_counts(toks: Column): Column =
-    inv(TextHashOps.getClass, ArrayType(StructType(Seq(
-      StructField("t", StringType, nullable = false),
-      StructField("cnt", LongType, nullable = false))), containsNull = false),
-      "tokenCounts", toks)
 
   /** Per-doc DSIR md5-bucket counts `(b, cnt)` (b = first md5 byte of
     * "w1 w2", 0..255 — the int reading of the hex bucket
@@ -350,7 +343,7 @@ object functions {
 }
 
 /** Session extension wiring the function surface into SQL at session build
-  * time: `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * time: `withExtensions(new GraftExtensions)` on the session builder, or
   * `spark.sql.extensions=graft.expr.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

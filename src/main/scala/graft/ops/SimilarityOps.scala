@@ -1631,25 +1631,6 @@ object SimilarityOps {
     * The exclusion predicate is the only variation point: cross-label
     * for negative mining (same id ⇒ same label ⇒ excluded), cross-id
     * for the neighbor graph. Output: (a_id, c_id, cos_sim, rank ≤ k). */
-  /** Diagnostic stage probe for the mining pipeline (graft.Debug
-    * `hn_probe_stages`): row counts of the candidate frame before and
-    * after distinct — the two cardinalities that decide whether mined
-    * top-K wall time is assignment- or shuffle-bound at a given SF. */
-  private[graft] def hnStageProbe(s: SparkSession, dir: String): DataFrame = {
-    val model = fitMiningModel(s, dir)
-    val emb = t(s, dir, "embeddings")
-    val idx = emb.select(col("vec_id").as("c_id"), col("label").as("c_label"),
-      explode(miningCells(s, model, col("embedding"), MineAssign)).as("cell"))
-    val pr = emb.select(col("vec_id").as("a_id"), col("label").as("a_label"),
-      explode(miningCells(s, model, col("embedding"), MineProbe)).as("cell"))
-    val joined = pr.join(idx, "cell").filter(col("a_label") =!= col("c_label"))
-    val raw = joined.count()
-    val dist = joined.select("a_id", "c_id").distinct().count()
-    println(s"[hn_probe] raw_pairs=$raw distinct_pairs=$dist")
-    import s.implicits._
-    Seq(("raw_pairs", raw), ("distinct_pairs", dist)).toDF("stage", "rows")
-  }
-
   private def minedTopK(s: SparkSession, dir: String,
       exclude: Column, k: Int): DataFrame = {
     val model = fitMiningModel(s, dir)
@@ -1671,7 +1652,7 @@ object SimilarityOps {
       .orderBy(col("cos_sim").desc, col("c_id"))
     // Cell-LOCAL scoring — the sf10 decade finding. Candidate count is
     // exactly linear (92 distinct pairs/anchor at sf1 AND sf10, measured
-    // by hnStageProbe), but the old plan deduped first and then joined
+    // by a one-off stage probe), but the old plan deduped first and then joined
     // both embedding sides onto the O(candidates) stream: at sf10 that
     // second join shuffled 184M rows × ~300 B of attached embedding —
     // ~55 GB for one exchange, and hard_negatives measured 25.7× at 10×

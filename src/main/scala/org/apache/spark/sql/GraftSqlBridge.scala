@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 /** Narrow, stable bridge to the `private[sql]` Expression↔Column converters
   * (Spark 4.x moved `Column` to a connect-agnostic ColumnNode model; classic
@@ -11,6 +11,14 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `c` as a Catalyst literal when it is a bare `lit(...)`. [[expression]]
+    * cannot tell: it wraps the column node unconverted until analysis. */
+  def literal(c: Column): Option[Literal] = c.node match {
+    case internal.Literal(v, Some(dt), _) => Some(Literal.create(v, dt))
+    case internal.Literal(v, None, _) => Some(Literal(v))
+    case _ => None
+  }
 
   /** RDD-level release of a `localCheckpoint()`ed frame's blocks.
     * `Dataset.unpersist` routes to `CacheManager.uncacheQuery`, which

@@ -551,6 +551,18 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("gram_stats checks a literal n after its int cast") {
+    import spark.implicits._
+    import graft.expr.functions.gram_stats
+    intercept[IllegalArgumentException](gram_stats(col("toks"), lit(3)))
+    val docs = Seq(Seq("a", "b", "a", "b", "a")).toDF("toks")
+    def stats(n: org.apache.spark.sql.Column) =
+      docs.select(gram_stats(col("toks"), n)).head().getSeq[Long](0)
+    assert(stats(lit("2")) == stats(lit(2)))
+    assert(stats(lit(2L)) == stats(lit(2)))
+    assert(stats(lit("1")) == stats(lit(1)))
+  }
+
   // r12: text_entropy rides the entropyStats kernel; pin its
   // [n_tok, n_uniq, entropy_fp] per doc equal to the explode →
   // (doc, tok) count → doc window → re-agg formulation it replaced,

@@ -76,8 +76,9 @@ object Tables {
 
   /** Geo-aware scan of a lake this engine wrote: reads the parquet tree
     * and reports the GeoParquet primary geometry column found in the
-    * first stamped footer (None for a non-geo table). What a consumer
-    * needs to locate the WKB column without out-of-band schema knowledge. */
+    * first footer carrying `geo` (None for a non-geo table). What a
+    * consumer needs to locate the WKB column without out-of-band schema
+    * knowledge. */
   def readGeo(spark: SparkSession, path: String): (DataFrame, Option[String]) = {
     val df = spark.read.parquet(path)
     val primary = graft.ops.GeoParquetMeta.listParquet(spark, path)

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** The reference's compaction plane (compaction/runtime/handler.py): rewrite
   * a day's (or month's) many small snappy files into few large zstd-15
   * files with tuned row groups (:104-127) — in Spark, a ~20-line batch job:
-  * schema-pinned scan → coalesce → sort-within-partitions → parquet write
-  * with codec + block-size options.
+  * schema-pinned scan → coalesce → sort-within-partitions → GeoParquet
+  * write with codec + block-size options, each output file's `geo` footer
+  * written by that same write ([[GeoParquetMeta.Format]]).
   *
   * At 100 TB this is the small-file fix that keeps scan parallelism sane:
   * target row groups of 61,440–122,880 rows (the reference's tuning, from
@@ -108,17 +109,18 @@ object CompactOps {
         val k = geoCurveKey(geoCurve)
         df.repartitionByRange(targetFiles, k).sortWithinPartitions(k)
       } else df.coalesce(targetFiles)
+    // the geo format writes the GeoParquet footer on each output file like
+    // the reference (compaction/runtime/handler.py:86-95); a table without
+    // the geometry column gets plain parquet
     arranged.write
+      .format(GeoParquetMeta.Format)
       .option("compression", "zstd")
       .option("parquet.compression.codec.zstd.level", ZstdLevel.toString)
       // ~122,880 rows × ~100 B/row keeps row groups inside the reference's
       // 61,440–122,880-row band for this schema.
       .option("parquet.block.size", (12 * 1024 * 1024).toString)
       .mode("overwrite")
-      .parquet(outPath)
-    // Compaction re-attaches the GeoParquet footer like the reference
-    // (compaction/runtime/handler.py:86-95); no-op for non-geo tables.
-    GeoParquetMeta.attach(spark, outPath)
+      .save(outPath)
   }
 
   // ---- G4: cron-compaction date-window orchestration ----

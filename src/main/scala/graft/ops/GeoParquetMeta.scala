@@ -1,132 +1,95 @@
 package graft.ops
 
+import com.fasterxml.jackson.databind.DeserializationFeature
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
-/** GeoParquet file-level metadata (B1). The reference stamps every written
-  * file with the `geo` footer key-value (etl/runtime/handler.py:144-156,
-  * `write_geoparquet(..., generate_covering=True)`) and compaction
-  * re-attaches it (compaction/runtime/handler.py:86-95); without it a
-  * GeoParquet-aware reader (geopandas, DuckDB-spatial) won't recognize the
-  * output as geo.
+/** GeoParquet file-level metadata (B1). The reference writes the `geo`
+  * footer key-value in the same pyarrow write that produces each file
+  * (etl/runtime/handler.py:144-156, `write_geoparquet(...,
+  * generate_covering=True)`) and compaction writes it again on its outputs
+  * (compaction/runtime/handler.py:86-95); without it a GeoParquet-aware
+  * reader (geopandas, DuckDB-spatial) won't recognize the output as geo.
   *
-  * Spark's parquet writer has no hook for user key-value metadata, so this
-  * stamps files post-write: `ParquetFileWriter.appendFile` raw-copies the
-  * row groups (no decode/re-encode — IO-bound, one sequential pass) and
-  * `end(extraMetadata)` writes a new footer carrying the original key-values
-  * plus `geo`. The per-file bbox comes from the footer's own column
-  * statistics for the covering struct — no data rescan. O(files),
-  * embarrassingly parallel across files: sweeps larger than a couple of
-  * files run as a Spark job over the file list, so a cluster-scale lake
-  * sweep parallelizes across executors instead of serializing on the
-  * driver.
+  * Here too the footer is written by the write itself: every geo write
+  * goes through [[Format]], Spark's parquet format whose write support
+  * folds each file's bbox while writing rows and adds `geo` to the footer
+  * when the file closes. A file therefore never changes after its commit,
+  * which keeps a streaming file sink's `_spark_metadata` log (the
+  * exactly-once record, with each file's size) true as written. This
+  * object keeps the JSON codec and the footer readers.
   */
 object GeoParquetMeta {
 
   val GeoKey = "geo"
   val Version = "1.1.0"
 
-  /** GeoParquet `geo` JSON for a WKB point column with a bbox covering.
-    * `crs` omitted ⇒ OGC:CRS84 per the GeoParquet 1.1 spec — the
-    * reference's CRS (handler.py:150). */
-  private def geoJson(primary: String, bboxCol: Option[String],
+  /** `.format(GeoParquetMeta.Format)` writes parquet plus the `geo`
+    * footer; call `.save(path)`, since `.parquet(path)` resets the format
+    * to plain parquet. */
+  val Format: String = classOf[GeoParquetFormat].getName
+
+  /** The WKB point column and its GeoParquet bbox covering struct, as
+    * [[IngestOps.enrich]] writes them. */
+  private[ops] val Primary = "geometry"
+  private[ops] val BboxCol = "bbox"
+  private[ops] val Leaves = Seq("xmin", "ymin", "xmax", "ymax")
+
+  /** GeoParquet `geo` JSON for the WKB point column, with the bbox
+    * covering when the file has the `bbox` struct and the file bbox when
+    * one is known. `crs` omitted ⇒ OGC:CRS84 per the GeoParquet 1.1 spec —
+    * the reference's CRS (handler.py:150). */
+  private[ops] def geoJson(covering: Boolean,
       bbox: Option[(Double, Double, Double, Double)]): String = {
-    val bboxPart = bbox.map { case (x0, y0, x1, y1) =>
-      s""","bbox":[$x0,$y0,$x1,$y1]"""
-    }.getOrElse("")
-    val covering = bboxCol.map { b =>
-      s""","covering":{"bbox":{"xmin":["$b","xmin"],"ymin":["$b","ymin"],"xmax":["$b","xmax"],"ymax":["$b","ymax"]}}"""
-    }.getOrElse("")
-    s"""{"version":"$Version","primary_column":"$primary","columns":{"$primary":{"encoding":"WKB","geometry_types":["Point"]$bboxPart$covering}}}"""
-  }
-
-  /** All `.parquet` files under `path`, recursing through hive partitions. */
-  private def parquetFiles(conf: Configuration, path: String): Seq[Path] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, true)
-    val out = Seq.newBuilder[Path]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-        out += f.getPath
+    val box = bbox.toList.map { case (x0, y0, x1, y1) =>
+      "bbox" -> JArray(List(x0, y0, x1, y1).map(JDouble(_)))
     }
-    out.result()
+    val cover = if (!covering) Nil else List("covering" -> JObject(
+      "bbox" -> JObject(Leaves.map(l =>
+        l -> JArray(List(JString(BboxCol), JString(l)))): _*)))
+    val column = JObject(List(
+      "encoding" -> JString("WKB"),
+      "geometry_types" -> JArray(List(JString("Point")))) ++ box ++ cover)
+    JsonMethods.compact(JObject(
+      "version" -> JString(Version),
+      "primary_column" -> JString(Primary),
+      "columns" -> JObject(Primary -> column)))
   }
 
-  /** File bbox from the footer's min/max statistics of the covering
-    * struct's leaves — None when stats are absent. */
-  private def bboxFromStats(
-      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
-      bboxCol: String): Option[(Double, Double, Double, Double)] = {
-    def agg(leaf: String, wantMin: Boolean): Option[Double] = {
-      val vals = footer.getBlocks.asScala.flatMap { rg =>
-        rg.getColumns.asScala
-          .filter(c => c.getPath.toArray.toSeq == Seq(bboxCol, leaf))
-          .flatMap { c =>
-            val st = c.getStatistics
-            if (st == null || !st.hasNonNullValue) None
-            else Some(if (wantMin) st.genericGetMin else st.genericGetMax)
+  /** Parse a `geo` footer value into (version, primary geometry column,
+    * file bbox of that column). None for anything but one JSON object;
+    * a missing field reads as "" (or no bbox), as files written by older
+    * versions of this engine are read. */
+  def parseGeo(json: String):
+      Option[(String, String, Option[(Double, Double, Double, Double)])] =
+    Try(JsonMethods.mapper.readerFor(classOf[JValue])
+      .`with`(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+      .readValue[JValue](json)).toOption.collect { case o: JObject =>
+      def str(v: JValue) = v match { case JString(s) => s; case _ => "" }
+      val primary = str(o \ "primary_column")
+      val bbox = o \ "columns" \ primary \ "bbox" match {
+        case JArray(vs) =>
+          vs.collect { case JDouble(d) => d; case JInt(i) => i.toDouble } match {
+            case List(x0, y0, x1, y1) => Some((x0, y0, x1, y1))
+            case _ => None
           }
-      }.collect { case d: java.lang.Double => d.doubleValue() }
-      if (vals.isEmpty) None else Some(if (wantMin) vals.min else vals.max)
-    }
-    for {
-      x0 <- agg("xmin", wantMin = true)
-      y0 <- agg("ymin", wantMin = true)
-      x1 <- agg("xmax", wantMin = false)
-      y1 <- agg("ymax", wantMin = false)
-    } yield (x0, y0, x1, y1)
-  }
-
-  /** Replace `file` with `tmp`, keeping the original alive until the last
-    * moment: prefer the single overwriting rename (atomic on HDFS/local);
-    * fall back to move-aside + promote on filesystems with no
-    * AbstractFileSystem binding (some object-store connectors expose only
-    * a FileSystem). A crash at any point leaves either the original or its
-    * `.geo.bak` on disk — [[recoverOrphans]] restores it on the next full
-    * sweep; data is never lost. */
-  private def promote(conf: Configuration, tmp: Path, file: Path): Unit =
-    try
-      org.apache.hadoop.fs.FileContext.getFileContext(file.toUri, conf)
-        .rename(tmp, file, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        val fs = file.getFileSystem(conf)
-        val bak = new Path(file.getParent, s".${file.getName}.geo.bak")
-        if (!fs.rename(file, bak) || !fs.rename(tmp, file))
-          throw new java.io.IOException(s"geo stamp rename failed for $file")
-        fs.delete(bak, false)
-    }
-
-  /** Recover from a crash mid-promotion (see the fallback in [[attach]]).
-    * A leftover `.X.geo.bak` whose original `X` is missing means the crash
-    * hit between moving the original aside and promoting the stamped copy —
-    * restore the original (the sweep will re-stamp it). One whose original
-    * exists is a completed promotion — drop the backup. Stray `.X.geo.tmp`
-    * files are incomplete stamp outputs — drop them too. */
-  private def recoverOrphans(conf: Configuration, path: String): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (f.isFile && n.startsWith(".") && n.endsWith(".geo.bak")) {
-        val orig = new Path(f.getPath.getParent,
-          n.substring(1, n.length - ".geo.bak".length))
-        if (!fs.exists(orig)) fs.rename(f.getPath, orig)
-        else fs.delete(f.getPath, false)
-      } else if (f.isFile && n.startsWith(".") && n.endsWith(".geo.tmp")) {
-        fs.delete(f.getPath, false)
+        case _ => None
       }
+      (str(o \ "version"), primary, bbox)
     }
-  }
 
   /** Read the footer key-value metadata of one parquet file. */
   def keyValueMeta(spark: SparkSession, file: String): Map[String, String] = {
@@ -137,197 +100,104 @@ object GeoParquetMeta {
     finally reader.close()
   }
 
-  /** Read side of the round-trip: parse a stamped file's `geo` footer into
-    * (version, primary geometry column, file bbox) — what a GeoParquet-
-    * aware reader needs to locate the geometry and prune by bbox. */
+  /** Read side of the round-trip: a file's parsed `geo` footer (see
+    * [[parseGeo]]) — what a GeoParquet-aware reader needs to locate the
+    * geometry and prune by bbox. None without a well-formed `geo` key. */
   def geoInfo(spark: SparkSession, file: String):
       Option[(String, String, Option[(Double, Double, Double, Double)])] =
-    keyValueMeta(spark, file).get(GeoKey).map { json =>
-      def field(k: String): Option[String] =
-        (s""""$k":"([^"]+)"""").r.findFirstMatchIn(json).map(_.group(1))
-      val bbox =
-        """"bbox":\[([-0-9.eE]+),([-0-9.eE]+),([-0-9.eE]+),([-0-9.eE]+)\]""".r
-          .findFirstMatchIn(json)
-          .map(m => (m.group(1).toDouble, m.group(2).toDouble,
-            m.group(3).toDouble, m.group(4).toDouble))
-      (field("version").getOrElse(""), field("primary_column").getOrElse(""),
-        bbox)
-    }
+    keyValueMeta(spark, file).get(GeoKey).flatMap(parseGeo)
 
-  /** Stamp every parquet file under `path` whose schema contains
-    * `primary` with the GeoParquet `geo` footer entry. Files already
-    * stamped (or without the geometry column — e.g. a non-geo table fed
-    * through compaction) are left untouched.
-    *
-    * `onlyFiles`, when given, restricts the stamping to that exact file
-    * set — the incremental path for streaming appends (see
-    * [[graft.ops.IngestOps.writeHive]]), which avoids re-opening every
-    * historical footer on each micro-batch.
-    *
-    * Returns the number of files carrying the geo footer after the call
-    * (newly stamped + already stamped); 0 for a non-geo table. */
-  /** Stamp one file in place (no-op when already stamped or when the
-    * schema lacks the geometry column). Returns whether the file carries
-    * the geometry column. A pure function of (conf, file) — safe to run
-    * on any executor. */
-  private def stampOne(conf: Configuration, file: Path,
-      primary: String, bboxCol: String): Boolean = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val (footer, schema, kv) = try {
-      val f = reader.getFooter
-      (f, f.getFileMetaData.getSchema,
-        f.getFileMetaData.getKeyValueMetaData.asScala.toMap)
-    } finally reader.close()
-    val hasGeom = schema.getFields.asScala.exists(_.getName == primary)
-    if (hasGeom && !kv.contains(GeoKey)) {
-      val hasBbox = schema.getFields.asScala.exists(_.getName == bboxCol)
-      val json = geoJson(primary,
-        if (hasBbox) Some(bboxCol) else None,
-        if (hasBbox) bboxFromStats(footer, bboxCol) else None)
-      val tmp = new Path(file.getParent, s".${file.getName}.geo.tmp")
-      val writer = new ParquetFileWriter(
-        HadoopOutputFile.fromPath(tmp, conf), schema,
-        ParquetFileWriter.Mode.OVERWRITE,
-        128L * 1024 * 1024, 0) // row-group size is moot: blocks raw-copied
-      writer.start()
-      writer.appendFile(HadoopInputFile.fromPath(file, conf))
-      writer.end((kv + (GeoKey -> json)).asJava)
-      promote(conf, tmp, file)
-    }
-    hasGeom
-  }
-
-  def attach(spark: SparkSession, path: String,
-      primary: String = "geometry", bboxCol: String = "bbox",
-      onlyFiles: Option[Seq[Path]] = None): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // full sweep (first write / healing pass): first restore anything a
-    // crashed promotion left behind, so the listing below sees it
-    if (onlyFiles.isEmpty) recoverOrphans(conf, path)
-    val files = onlyFiles.getOrElse(parquetFiles(conf, path))
-    if (files.isEmpty) return 0
-    // per-file stamping is embarrassingly parallel and IO-bound: big
-    // sweeps ship the file list to executors (at cluster scale a lake
-    // sweep is thousands of files — a driver loop would serialize it);
-    // tiny batches (a streaming append's 1-2 new files) stay on the
-    // driver to skip the job round-trip.
-    if (files.size <= 2) files.count(f => stampOne(conf, f, primary, bboxCol))
-    else {
-      val ser = new org.apache.spark.SerializableWritable(conf)
-      val sc = spark.sparkContext
-      sc.parallelize(files.map(_.toString),
-          math.min(files.size, sc.defaultParallelism))
-        .map(f => stampOne(ser.value, new Path(f), primary, bboxCol))
-        .filter(identity).count().toInt
-    }
-  }
-
-  /** Commit-log-driven stamping for the streaming parquet sink (the
-    * "commit-protocol hook" upgrade over writeHive's per-batch tree
-    * listing): the sink's `_spark_metadata` file log records exactly the
-    * files each batch committed, so the file list comes from the batch
-    * manifests — O(committed files), zero tree listing.
-    *
-    * The manifest also records each file's SIZE, and Spark reads sink
-    * output through the log (`MetadataLogFileIndex` serves the logged
-    * length to the parquet footer reader), so stamping must update the
-    * manifests too — a stamped file whose logged length is stale makes
-    * footer seeks land past EOF. Both steps happen here: stamp the files,
-    * then atomically rewrite each manifest's size/modificationTime to the
-    * on-disk reality.
-    *
-    * Run this against a QUIESCED sink (a finished `Trigger.AvailableNow`
-    * run, or a stopped/maintenance window): a live query compacts its log
-    * from in-memory state and would resurrect stale sizes. The live-stream
-    * stamping path is `foreachBatch` + [[IngestOps.writeHive]], which
-    * stamps inline and has no sink log. Returns the number of data files
-    * now carrying the geo footer. */
-  def stampSinkLog(spark: SparkSession, outPath: String,
-      primary: String = "geometry", bboxCol: String = "bbox"): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val metaDir = new Path(outPath, "_spark_metadata")
-    val fs = metaDir.getFileSystem(conf)
-    if (!fs.exists(metaDir)) return 0
-    // A crashed manifest rewrite on promote's non-atomic fallback leaves
-    // `.<id>.geo.bak` with the original manifest missing — a hole in the
-    // log that silently drops that batch from sink reads. Restore those
-    // first (same one listing), mirroring recoverOrphans; stray .geo.tmp
-    // are incomplete rewrites — drop them.
-    val entries = fs.listStatus(metaDir).map(_.getPath)
-    val restored = Seq.newBuilder[Path]
-    entries.foreach { p =>
-      val n = p.getName
-      if (n.startsWith(".") && n.endsWith(".geo.bak")) {
-        val orig = new Path(metaDir, n.substring(1, n.length - ".geo.bak".length))
-        if (!fs.exists(orig)) { if (fs.rename(p, orig)) restored += orig }
-        else fs.delete(p, false)
-      } else if (n.startsWith(".") && n.endsWith(".geo.tmp")) {
-        fs.delete(p, false)
-      }
-    }
-    // batch manifests are named <id>, rollups <id>.compact
-    val manifests = (entries ++ restored.result()).distinct.filter { p =>
-      val n = p.getName.stripSuffix(".compact")
-      n.nonEmpty && n.forall(_.isDigit)
-    }
-    val pathRe = """"path":"([^"]+)"""".r
-    def readLines(m: Path): Seq[String] = {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    // one read per manifest, one exists-check per distinct file. A logged
-    // file that is missing but has a .geo.bak sibling is a crashed
-    // promotion (see promote's fallback) — restore it here, keeping this
-    // path tree-listing-free (no recoverOrphans sweep needed)
-    val manifestLines = manifests.map(m => m -> readLines(m)).toSeq
-    val files = manifestLines.flatMap(_._2)
-      .flatMap(pathRe.findFirstMatchIn(_))
-      .map(g => new Path(new java.net.URI(g.group(1))))
-      .distinct.flatMap { f =>
-        if (fs.exists(f)) Some(f)
-        else {
-          val bak = new Path(f.getParent, s".${f.getName}.geo.bak")
-          if (fs.exists(bak) && fs.rename(bak, f)) Some(f) else None
-        }
-      }
-    if (files.isEmpty) return 0
-    val stamped = attach(spark, outPath, primary, bboxCol, Some(files))
-    // re-point the log at the stamped reality: fix size + mtime per entry.
-    // Stat each distinct file once (files recur across .compact rollups).
-    val stats = files.map(f => f -> fs.getFileStatus(f)).toMap
-    manifestLines.foreach { case (m, lines) =>
-      var changed = false
-      val fixed = lines.map { line =>
-        val st = pathRe.findFirstMatchIn(line)
-          .flatMap(g => stats.get(new Path(new java.net.URI(g.group(1)))))
-        st match {
-          case Some(s) =>
-            val f = line
-              .replaceAll(""""size":\d+""", s""""size":${s.getLen}""")
-              .replaceAll(""""modificationTime":\d+""",
-                s""""modificationTime":${s.getModificationTime}""")
-            if (f != line) changed = true
-            f
-          case None => line
-        }
-      }
-      if (changed) {
-        val tmp = new Path(m.getParent, s".${m.getName}.geo.tmp")
-        val out = fs.create(tmp, true)
-        try out.write((fixed.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-        promote(conf, tmp, m)
-      }
-    }
-    stamped
-  }
-
-  /** All parquet files currently under `path` (for before/after diffs). */
+  /** All `.parquet` files under `path`, recursing through hive partitions
+    * (empty when `path` does not exist). */
   def listParquet(spark: SparkSession, path: String): Set[Path] = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    if (!root.getFileSystem(conf).exists(root)) Set.empty
-    else parquetFiles(conf, path).toSet
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = Set.newBuilder[Path]
+    if (fs.exists(root)) {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.isFile && f.getPath.getName.endsWith(".parquet")) out += f.getPath
+      }
+    }
+    out.result()
+  }
+}
+
+/** Spark's parquet file format with the GeoParquet `geo` footer: the only
+  * change is the write support each output file is written with. Used by
+  * name through [[GeoParquetMeta.Format]] on batch writers and streaming
+  * file sinks alike. */
+class GeoParquetFormat extends ParquetFileFormat {
+  override def prepareWrite(sparkSession: SparkSession, job: Job,
+      options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
+    val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
+    job.getConfiguration.setClass(ParquetOutputFormat.WRITE_SUPPORT_CLASS,
+      classOf[GeoParquetWriteSupport], classOf[WriteSupport[_]])
+    factory
+  }
+}
+
+/** Spark's parquet write support plus a per-file bbox fold. One instance
+  * writes one file: `write` folds min x/y and max x/y over the `bbox`
+  * leaves (skipping nulls and non-finite values, which have no JSON form),
+  * and `finalizeWrite` adds `geo` to the footer when the schema has the
+  * geometry column. A file with no finite coordinate gets `geo` without a
+  * bbox; a schema with no `bbox` struct of doubles gets no fold, and no
+  * covering unless a `bbox` column exists. */
+class GeoParquetWriteSupport extends ParquetWriteSupport {
+  import GeoParquetMeta._
+
+  private var geo = false
+  private var covering = false
+  private var bboxOrd = -1
+  private var bboxFields = 0
+  private var leafOrds = Array.empty[Int]
+  private val acc = Array(Double.PositiveInfinity, Double.PositiveInfinity,
+    Double.NegativeInfinity, Double.NegativeInfinity)
+
+  override def init(conf: Configuration): WriteSupport.WriteContext = {
+    val ctx = super.init(conf)
+    val schema = DataType.fromJson(conf.get(ParquetWriteSupport.SPARK_ROW_SCHEMA))
+      .asInstanceOf[StructType]
+    geo = schema.fieldNames.contains(Primary)
+    covering = schema.fieldNames.contains(BboxCol)
+    if (geo && covering) schema(BboxCol).dataType match {
+      case st: StructType if Leaves.forall(l =>
+          st.fields.exists(f => f.name == l && f.dataType == DoubleType)) =>
+        bboxOrd = schema.fieldIndex(BboxCol)
+        bboxFields = st.length
+        leafOrds = Leaves.map(st.fieldIndex).toArray
+      case _ =>
+    }
+    ctx
+  }
+
+  override def write(row: InternalRow): Unit = {
+    if (bboxOrd >= 0 && !row.isNullAt(bboxOrd)) {
+      val b = row.getStruct(bboxOrd, bboxFields)
+      var i = 0
+      while (i < 4) {
+        val o = leafOrds(i)
+        if (!b.isNullAt(o)) {
+          val v = b.getDouble(o)
+          if (v.isFinite)
+            acc(i) = if (i < 2) math.min(acc(i), v) else math.max(acc(i), v)
+        }
+        i += 1
+      }
+    }
+    super.write(row)
+  }
+
+  override def finalizeWrite(): WriteSupport.FinalizedWriteContext = {
+    val meta = new java.util.HashMap(super.finalizeWrite().getExtraMetaData)
+    if (geo) {
+      val bbox =
+        if (acc.exists(_.isInfinite)) None
+        else Some((acc(0), acc(1), acc(2), acc(3)))
+      meta.put(GeoKey, geoJson(covering, bbox))
+    }
+    new WriteSupport.FinalizedWriteContext(meta)
   }
 }

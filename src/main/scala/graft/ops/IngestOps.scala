@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * geometry (F4), GeoParquet `bbox` covering struct, drops lat/lon, and adds
   * ingest-date partition columns (B2 — the reference partitions by
   * wall-clock ingest date; we parameterize on a clock column for
-  * determinism). `writeHive` appends snappy parquet partitioned by
-  * year/month/day. The same `decode ∘ enrich` function is the body of the
+  * determinism). `writeHive` appends snappy GeoParquet partitioned by
+  * year/month/day, each file's `geo` footer written by the same write.
+  * The same `decode ∘ enrich` function is the body of the
   * streaming query in [[graft.streaming.IngestStream]].
   *
   * One deliberate divergence, documented in README: the reference populates
@@ -76,46 +77,17 @@ object IngestOps {
       .withColumn("day", dayofmonth(col("event_ts")))
       .drop("latitude", "longitude", "timestamp")
 
-  /** B1/B2: hive-partitioned snappy append (hot zone), then GeoParquet
-    * `geo` footer stamping (reference writes it on every file,
-    * handler.py:144-156).
-    *
-    * Stamping strategy for long-running streams: the FIRST write to a
-    * path in this JVM does a full-tree attach — this heals files orphaned
-    * by a crash between a previous process's append and its stamping
-    * pass. Subsequent writes stamp only the files the append produced,
-    * with the file set carried over between batches so each batch costs
-    * one tree listing and O(new files) footer work (the listing itself is
-    * the irreducible cost without commit-protocol hooks). */
-  private val knownFiles =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[org.apache.hadoop.fs.Path]]()
-
-  def writeHive(df: DataFrame, path: String): Unit = {
-    val firstWrite = !knownFiles.containsKey(path)
-    val before =
-      if (firstWrite) GeoParquetMeta.listParquet(df.sparkSession, path)
-      else knownFiles.get(path)
+  /** B1/B2: hive-partitioned snappy append (hot zone) in one write that
+    * also gives every file its GeoParquet `geo` footer, as the reference
+    * writes it on every file (handler.py:144-156). See
+    * [[GeoParquetMeta.Format]]. */
+  def writeHive(df: DataFrame, path: String): Unit =
     df.write
+      .format(GeoParquetMeta.Format)
       .partitionBy("year", "month", "day")
       .option("compression", "snappy")
       .mode("append")
-      .parquet(path)
-    val after = GeoParquetMeta.listParquet(df.sparkSession, path)
-    try {
-      if (firstWrite) // full sweep: also stamps pre-existing unstamped files
-        GeoParquetMeta.attach(df.sparkSession, path)
-      else
-        GeoParquetMeta.attach(df.sparkSession, path,
-          onlyFiles = Some((after -- before).toSeq.sortBy(_.toString)))
-      knownFiles.put(path, after)
-    } catch {
-      case e: Throwable =>
-        // a failed stamping pass may leave unstamped files behind; forget
-        // the path so the next write runs the healing full sweep
-        knownFiles.remove(path)
-        throw e
-    }
-  }
+      .save(path)
 
   // Oracle-checkable slice of the ingest pipeline (everything except the
   // binary geometry / geohash, which have no DuckDB-expressible encoding).

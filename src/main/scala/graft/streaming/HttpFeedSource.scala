@@ -100,9 +100,9 @@ object HttpFeedSource {
     * WAL-persisted under the checkpoint before the offset advances), so
     * a replayed batch re-processes the SAME fetched bytes instead of
     * re-polling — genuine exactly-once from poll to parquet. The sink
-    * side keeps the foreachBatch shape because `writeHive` does work a
-    * declarative sink can't (GeoParquet footer stamping); the SOURCE is
-    * where replayability lives. Poll failures yield an empty batch and
+    * side keeps the foreachBatch shape so the lake stays a plain hive
+    * tree with no sink log (`_spark_metadata`), written and read like
+    * the batch lake; the SOURCE is where replayability lives. Poll failures yield an empty batch and
     * retry next trigger (see FeedV2), so there is no DLQ mode here —
     * at-most-once semantics stay with the legacy poller. */
   def pollQueryV2(spark: SparkSession, url: String, outPath: String,

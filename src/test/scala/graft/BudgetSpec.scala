@@ -1,0 +1,48 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import graft.ops.{CompactOps, IngestOps}
+import org.apache.spark.graftspec.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+
+/** Cost pins: the number of Spark jobs one call runs. A pin is the value
+  * measured when it was set; lower it only when a change removes work. */
+class BudgetSpec extends SparkSpec {
+
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    Bus.drain(sc)
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try { body; Bus.drain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  /** 400 decoded pings on 2024-03-05 (UTC), in 4 input partitions. */
+  private def oneDay = IngestOps.enrich(spark.range(0, 400, 1, 4).select(
+    concat(lit("trip_"), (col("id") % 7).cast("string")).as("trip_id"),
+    lit("route_1").as("route_id"), lit("0").as("direction_id"),
+    concat(lit("veh_"), col("id").cast("string")).as("vehicle_id"),
+    (lit(43.0) + col("id") / 1000.0).as("latitude"),
+    (lit(-79.7) + col("id") / 1000.0).as("longitude"),
+    lit(0.0).as("bearing"), lit(0.0).as("speed"),
+    (lit(1709650000L) + col("id")).as("timestamp")))
+
+  test("job budget: one writeHive of a 4-partition frame into one day, one compact") {
+    val hot = Files.createTempDirectory("graft-budget-hot").toString
+    val day = s"$hot/year=2024/month=3/day=5"
+    val write = jobs(IngestOps.writeHive(oneDay, hot))
+    assert(new java.io.File(day).listFiles().count(_.getName.endsWith(".parquet")) == 4)
+    assert(write == 1, s"writeHive ran $write jobs")
+
+    val cold = Files.createTempDirectory("graft-budget-cold").toString
+    val compact = jobs(CompactOps.compact(spark, day, cold))
+    // the input schema inference, the range-bound sample, the write
+    assert(compact == 3, s"compact ran $compact jobs")
+  }
+}

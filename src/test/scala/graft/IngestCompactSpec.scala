@@ -87,10 +87,10 @@ class IngestCompactSpec extends SparkSpec {
       x0 <= x1 && y0 <= y1 && x0 >= -80 && x1 <= -78 && y0 >= 42 && y1 <= 45
     }, s"implausible bboxes: $boxes")
 
-    // rows unchanged after the footer rewrite
+    // rows unchanged by the geo write
     assert(spark.read.parquet(hot).count() == enriched.count())
 
-    // compaction re-attaches the geo footer on its outputs
+    // compaction writes the geo footer on its outputs
     CompactOps.compact(spark, hot, cold, targetFiles = 1)
     geoOf(cold)
 
@@ -117,29 +117,6 @@ class IngestCompactSpec extends SparkSpec {
     assert(primaryCol.contains("geometry"))
     assert(geoDf.count() == enriched.count())
     assert(Tables.readGeo(spark, plainDir)._2.isEmpty)
-  }
-
-  test("geo stamping crash recovery: .geo.bak / .geo.tmp leftovers are healed") {
-    import graft.ops.GeoParquetMeta
-    val hot = Files.createTempDirectory("graft-geo-crash").toString
-    IngestOps.writeHive(enriched, hot)
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-    val n = spark.read.parquet(hot).count()
-    val victim = walk(new java.io.File(hot)).head
-    // simulate a crash between moving-aside and promotion on a non-atomic
-    // filesystem: the original is gone; only its backup and a stale,
-    // incomplete tmp remain
-    val bak = new java.io.File(victim.getParent, s".${victim.getName}.geo.bak")
-    assert(victim.renameTo(bak))
-    val tmp = new java.io.File(victim.getParent, s".${victim.getName}.geo.tmp")
-    java.nio.file.Files.write(tmp.toPath, Array[Byte](1, 2, 3))
-    assert(spark.read.parquet(hot).count() < n) // data currently missing
-    GeoParquetMeta.attach(spark, hot) // healing full sweep
-    assert(victim.exists && !bak.exists && !tmp.exists)
-    assert(spark.read.parquet(hot).count() == n)
-    assert(GeoParquetMeta.geoInfo(spark, victim.toString).isDefined)
   }
 
   test("geo compaction defaults to a z-ordered layout with tighter per-file bboxes") {

@@ -86,9 +86,9 @@ class StreamingSpec extends SparkSpec {
         apiKey = Some("x-api-key" -> "sekret"),
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
       try {
-        // wait for a fully-landed poll: hive partitions present AND the
-        // geo stamp attached (stopping earlier can interrupt a batch
-        // mid-attach; a later batch re-stamps, so stamped == batch done)
+        // wait for a fully-landed poll: a committed part file carrying
+        // the geo footer (the write gives each file its footer, so a
+        // committed file with geo means that batch's write finished)
         def stamped(): Boolean =
           parquetFiles(new java.io.File(out)).exists(f =>
             scala.util.Try(
@@ -221,14 +221,13 @@ class StreamingSpec extends SparkSpec {
         // in seconds, so the slack never slows a green run
         val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
         // poll for a fully-landed batch (the HTTP-poller test's stamped()
-        // pattern), not a whole-directory Spark read: every trigger
-        // re-stamps (rewrites) the landed part files, so under full-suite
-        // load a list-then-read spans multiple triggers and tears over
-        // and over — a full-suite run burned the whole 180 s that way
-        // while files demonstrably existed. A committed part file (not
-        // _temporary staging) carrying the geo footer means write +
-        // stamp both finished, so stop() cannot kill an in-flight batch
-        // before any data is durable. Row-level assertions happen
+        // pattern), not a whole-directory Spark read: under full-suite
+        // load a list-then-read spans multiple triggers, each adding
+        // files, and a full-suite run once burned the whole 180 s that
+        // way while files demonstrably existed. A committed part file
+        // (not _temporary staging) carrying the geo footer means a
+        // batch's write finished, so stop() cannot kill an in-flight
+        // batch before any data is durable. Row-level assertions happen
         // post-stop on the settled directory.
         def landed(): Boolean =
           parquetFiles(new java.io.File(out)).exists(f =>
@@ -1374,41 +1373,16 @@ class StreamingSpec extends SparkSpec {
       .map(_.getName)
     assert(partDirs.exists(_.startsWith("year=")))
 
-    // commit-log-driven geo stamping (quiesced sink): the _spark_metadata
-    // manifests name exactly the committed files — no tree listing — and
-    // get their logged sizes re-pointed at the stamped files so reads
-    // through the log keep working
+    // the geo format writes each file's footer before the sink log
+    // commits it: every file the log names carries `geo`
     import graft.ops.GeoParquetMeta
-    val stamped = GeoParquetMeta.stampSinkLog(spark, out)
-    assert(stamped > 0, "expected committed files in the sink log")
-    val files = parquetFiles(new java.io.File(out))
-    assert(files.nonEmpty)
-    files.foreach { f =>
-      assert(GeoParquetMeta.keyValueMeta(spark, f.toString)
-        .contains(GeoParquetMeta.GeoKey), s"unstamped sink file $f")
+    val committed = spark.read.parquet(out).inputFiles
+    assert(committed.nonEmpty, "expected committed files in the sink log")
+    committed.foreach { f =>
+      assert(GeoParquetMeta.keyValueMeta(spark, f)
+        .contains(GeoParquetMeta.GeoKey), s"sink file without geo: $f")
     }
-    // a second pass is idempotent (attach skips stamped files)
-    assert(GeoParquetMeta.stampSinkLog(spark, out) == stamped)
-    // crashed promotion: a logged file left as .geo.bak is restored from
-    // the manifest path alone (no tree sweep on this path)
-    val victim = files.head
-    val bak = new java.io.File(victim.getParent, s".${victim.getName}.geo.bak")
-    assert(victim.renameTo(bak))
-    assert(GeoParquetMeta.stampSinkLog(spark, out) == stamped)
-    assert(victim.exists && !bak.exists)
-    // crashed MANIFEST rewrite: promote's fallback can die between
-    // moving the batch manifest aside and promoting the fixed copy —
-    // the log then has a hole and sink reads silently drop that batch.
-    // stampSinkLog must restore it before collecting manifests.
-    val metaDir = new java.io.File(out, "_spark_metadata")
-    val manifest = metaDir.listFiles()
-      .filter(f => f.getName.stripSuffix(".compact").forall(_.isDigit)).head
-    val mBak = new java.io.File(metaDir, s".${manifest.getName}.geo.bak")
-    assert(manifest.renameTo(mBak))
-    assert(GeoParquetMeta.stampSinkLog(spark, out) == stamped)
-    assert(manifest.exists && !mBak.exists,
-      "batch manifest not restored from its .geo.bak")
-    // rows survive stamping — read through the (rewritten) metadata log
+    // rows read through the sink log
     assert(spark.read.parquet(out).count() == 1000)
   }
 

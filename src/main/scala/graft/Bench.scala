@@ -40,9 +40,7 @@ object Bench {
     }
 
     // SPARK_GRAFT_BENCH_ONLY: comma-separated query allowlist for targeted
-    // runs (the sf1 scale-proof passes run the heavy family only);
-    // SPARK_GRAFT_BENCH_NO_STREAM skips the streaming latency block (it
-    // measures the poll path, which has no scale-factor dimension).
+    // runs (the sf1 scale-proof passes run the heavy family only).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -54,63 +52,6 @@ object Bench {
     // driver's parse and scale_table.py alike.
     def num(v: Double, dec: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
-
-    // Streaming end-to-end latency FIRST, in a quiet JVM: round 5
-    // measured it after a 107-query catalog had filled the same session
-    // (codegen cache, GC, listener backlog) and p95 doubled for reasons
-    // that had nothing to do with the poll path. Order of operations:
-    // one discarded warmup run per path pays source + ingest codegen,
-    // then the legacy rate-tick poller and the offset-tracked V2 source
-    // are measured back to back — p50/p95 side by side, so the V2 WAL's
-    // durability cost per trigger is quantified rather than confounded.
-    // Failure degrades to an empty object, not a dead bench.
-    val stream =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_NO_STREAM")) "{}"
-      else try {
-        graft.streaming.StreamLatency.measure(spark, triggers = 2, useV2 = false)
-        graft.streaming.StreamLatency.measure(spark, triggers = 2)
-        val (l50, l95, ln) = graft.streaming.StreamLatency
-          .measure(spark, triggers = 12, useV2 = false)
-        val (p50, p95, n) = graft.streaming.StreamLatency
-          .measure(spark, triggers = 12)
-        info(
-          f"[bench] stream e2e (isolated) v2 p50=$p50%.3fs p95=$p95%.3fs over $n; " +
-            f"legacy p50=$l50%.3fs p95=$l95%.3fs over $ln")
-        // Load-scaled throughput: 1x/10x/100x events per trigger for both
-        // paths — the published proof that the V2 WAL's per-trigger
-        // durability cost does not grow superlinearly with batch size
-        // (the fixed-tiny-batch latency block above cannot show that).
-        // Its OWN try: a throughput failure (e.g. a noisy box blowing the
-        // 180 s deadline) must degrade to a missing "throughput" field,
-        // not discard the latency numbers already measured above.
-        val throughput =
-          try {
-            val pts = Seq(200, 2000, 20000).flatMap { vehicles =>
-              Seq(("v2", true), ("legacy", false)).map { case (path, v2) =>
-                val (t50, t95, tn) = graft.streaming.StreamLatency
-                  .measure(spark, triggers = 8, vehicles = vehicles,
-                    deadlineSec = 180, useV2 = v2)
-                val rps = vehicles / t50
-                info(
-                  f"[bench] stream throughput $path vehicles=$vehicles " +
-                    f"p50=$t50%.3fs p95=$t95%.3fs rows/s=$rps%.0f over $tn")
-                s"""{"path":"$path","vehicles":$vehicles,"p50":${num(t50, 3)},""" +
-                  s""""p95":${num(t95, 3)},"rows_per_sec":${num(rps, 0)},""" +
-                  s""""triggers":$tn}"""
-              }
-            }.mkString("[", ",", "]")
-            s""""throughput":$pts,"""
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stream throughput failed: ${e.getMessage}")
-            ""
-          }
-        s"""{"e2e_p50":$p50,"e2e_p95":$p95,"triggers":$n,""" +
-          s""""legacy_p50":$l50,"legacy_p95":$l95,"legacy_triggers":$ln,""" +
-          throughput + s""""isolated":true}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream e2e failed: ${e.getMessage}")
-        "{}"
-      }
 
     // Warmup pass on the smallest SF: same plan shapes → compiles every
     // wholestage-codegen class and lets the JIT finish before timing, so
@@ -247,7 +188,7 @@ object Bench {
       rs.map { case (k, v) =>
         "\"" + k + "\":" + (if (v < 0) "-1" else num(v, 3))
       }.mkString("{", ",", "}")
-    val summary = s""""metric":"total","value":${num(total, 3)},"unit":"sec","n_queries":${results.size},"estimator":"min_of_2_passes_plus_suspect_retries","pass1_total":${num(pass1Total, 3)},"stream":$stream,$paired"plans_md5":$plansMd5,"sf":"$sfDir""""
+    val summary = s""""metric":"total","value":${num(total, 3)},"unit":"sec","n_queries":${results.size},"estimator":"min_of_2_passes_plus_suspect_retries","pass1_total":${num(pass1Total, 3)},$paired"plans_md5":$plansMd5,"sf":"$sfDir""""
     val fullLine =
       s"""{"queries":${queriesJson(results)},"queries_pass1":${queriesJson(pass1)},$summary}"""
     // stdout keeps the contractual "queries" key, just restricted to the

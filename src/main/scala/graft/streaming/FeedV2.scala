@@ -11,11 +11,11 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** `graft-feed`: a DataSourceV2 micro-batch SOURCE for the polled HTTP
-  * feed — the offset-tracked replacement for the rate-tick + foreachBatch
-  * poller shape ([[HttpFeedSource.pollQuery]] keeps the legacy form for
-  * reference-parity DLQ semantics). One GET per trigger, like the
+  * feed, and the engine's only poller. One GET per trigger, like the
   * reference's EventBridge rate → Lambda contract
   * (etl/infrastructure/construct.py:202-221), but with GENUINE
   * exactly-once offsets:
@@ -27,14 +27,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    not durable;
   *  - a batch replayed after a crash re-reads the SAME bytes from the
   *    WAL (an HTTP GET is not replayable — re-fetching on replay would
-  *    silently substitute different data, which is exactly the
-  *    at-most-once hole the rate-tick poller had);
+  *    silently substitute different data);
   *  - `commit(end)` prunes WAL entries below the committed offset, so
   *    the dir holds only the uncommitted horizon (bounded by trigger
   *    backlog, not stream lifetime);
   *  - a FAILED poll simply does not advance the offset: the trigger
   *    produces an empty batch and the next one retries — no data loss,
-  *    no spurious failure of the whole query on one network blip.
+  *    no spurious failure of the whole query on one network blip. With
+  *    `dlqPath` set, each failed poll also leaves one dead-letter record
+  *    there, the reference's DLQ for failed invocations.
   *
   * Offsets count polls; batch (start, end] reads WAL indices
   * start..end-1. Payload rows are small (one feed snapshot per trigger),
@@ -43,7 +44,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the decode/enrich/write work downstream is fully distributed.
   *
   * Options: `url` (required), `apiKeyHeader`/`apiKeyValue`,
-  * `timeoutMs`. Schema: (poll_id LONG, fetch_ts_ms LONG, feed BINARY).
+  * `timeoutMs`, `dlqPath`. Schema: (poll_id LONG, fetch_ts_ms LONG,
+  * feed BINARY). The checkpoint and `dlqPath` must be local paths.
   */
 class FeedV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-feed"
@@ -74,6 +76,22 @@ object FeedV2 {
       }
   }
 
+  private def localDir(path: org.apache.hadoop.fs.Path, error: => String): java.io.File = {
+    val uri = path.toUri
+    require(uri.getScheme == null || uri.getScheme == "file", error)
+    new java.io.File(uri.getPath)
+  }
+
+  /** `bytes` as `dir/name`, whole or not at all: a hidden temp file, then
+    * an atomic rename (readers skip dot-files and `.tmp`). */
+  private def writeAtomic(dir: java.io.File, name: String, bytes: Array[Byte]): Unit = {
+    dir.mkdirs()
+    val tmp = new java.io.File(dir, s".$name.tmp")
+    java.nio.file.Files.write(tmp.toPath, bytes)
+    java.nio.file.Files.move(tmp.toPath, new java.io.File(dir, name).toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   private[graft] case class FeedOffset(polls: Long) extends Offset {
     override def json(): String = polls.toString
   }
@@ -94,12 +112,13 @@ object FeedV2 {
     private val timeoutMs: Int =
       Option(options.get("timeoutMs")).map(_.toInt).getOrElse(5000)
 
-    private val walDir = {
-      val uri = new org.apache.hadoop.fs.Path(checkpointLocation, "payloads").toUri
-      require(uri.getScheme == null || uri.getScheme == "file",
-        s"graft-feed WAL supports local checkpoints in this build, got $checkpointLocation")
-      new java.io.File(uri.getPath)
-    }
+    private val walDir = localDir(
+      new org.apache.hadoop.fs.Path(checkpointLocation, "payloads"),
+      s"graft-feed WAL supports local checkpoints in this build, got $checkpointLocation")
+    /** One JSON record per failed poll: (poll_id, ts, url, error). */
+    private val dlqDir: Option[java.io.File] = Option(options.get("dlqPath")).map(p =>
+      localDir(new org.apache.hadoop.fs.Path(p),
+        s"graft-feed dlqPath must be a local path in this build, got $p"))
 
     private def walFiles(): Array[java.io.File] =
       Option(walDir.listFiles())
@@ -122,19 +141,22 @@ object FeedV2 {
       val next = walCount()
       try {
         val bytes = HttpFeedSource.fetchFeed(url, apiKey, timeoutMs)
-        val ts = System.currentTimeMillis()
-        walDir.mkdirs()
-        val tmp = new java.io.File(walDir, f".$next%020d.tmp")
-        java.nio.file.Files.write(tmp.toPath, bytes)
-        val fin = new java.io.File(walDir, f"$next%020d" + s"_$ts")
-        java.nio.file.Files.move(tmp.toPath, fin.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        writeAtomic(walDir, f"$next%020d" + s"_${System.currentTimeMillis()}", bytes)
         FeedOffset(next + 1)
       } catch {
         case e: java.io.IOException =>
           // poll failure → empty batch, retry next trigger (the offset
           // only ever advances past durable payloads)
           logWarning(s"graft-feed poll of $url failed; retrying next trigger", e)
+          dlqDir.foreach { dir =>
+            val ms = System.currentTimeMillis()
+            val rec = ("poll_id" -> next) ~ ("ts" -> ms / 1000L) ~ ("url" -> url) ~
+              ("error" -> String.valueOf(e.getMessage))
+            // the same poll index fails on every retry: the file name
+            // keeps each attempt's record
+            writeAtomic(dir, f"$next%020d" + s"_${ms}_${java.util.UUID.randomUUID()}.json",
+              compact(render(rec)).getBytes("UTF-8"))
+          }
           FeedOffset(next)
       }
     }

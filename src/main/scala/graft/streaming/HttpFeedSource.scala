@@ -4,21 +4,20 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import graft.ops.IngestOps
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** A1: the reference's real feed source — an HTTP GET poll of a GTFS-rt
   * endpoint with an optional API-key header and a 5 s timeout
   * (etl/runtime/handler.py:43-52), re-expressed as Structured Streaming:
-  * a checkpointed rate-source tick per trigger, one fetch per micro-batch,
-  * the fetched FeedMessage pushed through the same `decodeProtobuf ∘
-  * enrich` transform as the batch path, appended hive-partitioned.
+  * the [[FeedV2]] source polls once per trigger and the fetched
+  * FeedMessage goes through the same `decodeProtobuf ∘ enrich` transform
+  * as the batch path, appended hive-partitioned.
   *
   * The fetch happens once per trigger on the driver (a feed snapshot is
   * one small binary — the reference's Lambda does exactly one GET per
-  * invocation); all decode/enrich/write work is distributed. Failures
-  * follow the reference's raise_for_status: a non-200 or timeout fails the
-  * batch, and the checkpointed trigger retries on the next tick.
+  * invocation); all decode/enrich/write work is distributed. A non-200 or
+  * timeout is the reference's raise_for_status: an IOException.
   */
 object HttpFeedSource {
 
@@ -49,70 +48,29 @@ object HttpFeedSource {
   }
 
   /** Start the polling ingest query: each trigger fires one fetch →
-    * decode → enrich(timezone) → hive-partitioned parquet append.
+    * decode → enrich(timezone) → hive-partitioned parquet append. The
+    * poll happens inside the [[FeedV2]] DataSourceV2 source (one GET per
+    * trigger, payload WAL-persisted under the checkpoint before the offset
+    * advances), so a replayed batch re-processes the SAME fetched bytes
+    * instead of re-polling — genuine exactly-once from poll to parquet.
+    * The sink side keeps the foreachBatch shape so the lake stays a plain
+    * hive tree with no sink log (`_spark_metadata`), written and read like
+    * the batch lake; the SOURCE is where replayability lives.
     *
-    * Failure semantics follow `dlqPath`: when set, a failed poll appends a
-    * (batch_id, ts, url, error) record there and the stream keeps running —
-    * the reference's at-most-once + dead-letter-queue behavior
-    * (etl/infrastructure/construct.py retry_attempts=0 + DLQ). When None,
-    * the batch fails and the checkpointed trigger retries — the
-    * exactly-once upgrade. */
-  def pollQuery(spark: SparkSession, url: String, outPath: String,
-      checkpoint: String, apiKey: Option[(String, String)] = None,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-      timezone: String = "UTC", dlqPath: Option[String] = None): StreamingQuery = {
-    val ticks = spark.readStream.format("rate")
-      .option("rowsPerSecond", 1).load()
-    val onBatch: (Dataset[Row], Long) => Unit = (batch, id) =>
-      if (!batch.isEmpty) {
-        val s = batch.sparkSession
-        import s.implicits._
-        // DLQ covers the POLL only: a fetch failure is the reference's
-        // dead-letter case. A failure after a successful fetch (decode /
-        // sink) must NOT be swallowed as a "poll failure" — the fetched
-        // data would be silently lost with the wrong blame — so it
-        // propagates and fails the batch in either mode.
-        val fetched: Option[Array[Byte]] =
-          try Some(fetchFeed(url, apiKey))
-          catch {
-            case e: java.io.IOException if dlqPath.isDefined =>
-              Seq((id, System.currentTimeMillis() / 1000L, url,
-                String.valueOf(e.getMessage)))
-                .toDF("batch_id", "ts", "url", "error")
-                .write.mode("append").parquet(dlqPath.get)
-              None
-          }
-        fetched.foreach { bytes =>
-          val feeds = Seq(Tuple1(bytes)).toDF("feed")
-          IngestOps.writeHive(
-            IngestOps.enrich(IngestOps.decodeProtobuf(feeds), timezone), outPath)
-        }
-      }
-    ticks.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(onBatch)
-      .start()
-  }
-
-  /** The offset-tracked form of [[pollQuery]]: the poll happens inside
-    * the [[FeedV2]] DataSourceV2 source (one GET per trigger, payload
-    * WAL-persisted under the checkpoint before the offset advances), so
-    * a replayed batch re-processes the SAME fetched bytes instead of
-    * re-polling — genuine exactly-once from poll to parquet. The sink
-    * side keeps the foreachBatch shape so the lake stays a plain hive
-    * tree with no sink log (`_spark_metadata`), written and read like
-    * the batch lake; the SOURCE is where replayability lives. Poll failures yield an empty batch and
-    * retry next trigger (see FeedV2), so there is no DLQ mode here —
-    * at-most-once semantics stay with the legacy poller. */
+    * A failed poll yields an empty batch and the next trigger retries. With
+    * `dlqPath` set, each failure also appends one (poll_id, ts, url, error)
+    * JSON record there and the stream keeps running — the reference's
+    * dead-letter queue (etl/infrastructure/construct.py). `checkpoint` and
+    * `dlqPath` must be local paths. */
   def pollQueryV2(spark: SparkSession, url: String, outPath: String,
       checkpoint: String, apiKey: Option[(String, String)] = None,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-      timezone: String = "UTC"): StreamingQuery = {
+      timezone: String = "UTC", dlqPath: Option[String] = None): StreamingQuery = {
     val reader = spark.readStream.format("graft-feed").option("url", url)
     apiKey.foreach { case (h, v) =>
       reader.option("apiKeyHeader", h).option("apiKeyValue", v)
     }
+    dlqPath.foreach(reader.option("dlqPath", _))
     val onBatch: (Dataset[Row], Long) => Unit = (batch, _) => {
       val feeds = batch.select("feed")
       if (!feeds.isEmpty)

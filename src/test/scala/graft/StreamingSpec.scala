@@ -81,8 +81,9 @@ class StreamingSpec extends SparkSpec {
       // direct fetch honors the api-key header and returns the feed bytes
       val bytes = HttpFeedSource.fetchFeed(url, Some("x-api-key" -> "sekret"))
       assert(bytes.sameElements(feed) && seenKey.get() == "sekret")
+      seenKey.set("") // from here on, every request is a poll
 
-      val q = HttpFeedSource.pollQuery(spark, url, out, ckpt,
+      val q = HttpFeedSource.pollQueryV2(spark, url, out, ckpt,
         apiKey = Some("x-api-key" -> "sekret"),
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
       try {
@@ -93,20 +94,21 @@ class StreamingSpec extends SparkSpec {
           parquetFiles(new java.io.File(out)).exists(f =>
             scala.util.Try(
               graft.ops.GeoParquetMeta.keyValueMeta(spark, f.toString))
-              .getOrElse(Map.empty).contains("geo")) // file may be mid-rewrite
+              .getOrElse(Map.empty).contains("geo")) // file may be mid-write
         val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
         while (!stamped() && System.nanoTime() < deadline) Thread.sleep(200)
         assert(stamped(), "poller produced no geo-stamped parquet within 60s")
       } finally q.stop()
 
       assert(hits.get() >= 2) // the direct fetch + at least one poll
+      assert(seenKey.get() == "sekret", "the source's poll did not send the api key")
       val back = spark.read.parquet(out)
       assert(back.count() >= 1)
       val r = back.filter(col("trip_id") === "T77").collect().head
       assert(r.getAs[String]("vehicle_id") == "V123")
       assert(r.getAs[String]("geohash").length == 7)
       assert(r.getAs[Int]("year") == 2024 && r.getAs[Int]("month") == 3)
-      // GeoParquet footer is stamped on the polled output too
+      // GeoParquet footer is written on the polled output too
       assert(parquetFiles(new java.io.File(out)).exists(f =>
         graft.ops.GeoParquetMeta.keyValueMeta(spark, f.toString).contains("geo")))
     } finally server.stop(0)
@@ -116,25 +118,53 @@ class StreamingSpec extends SparkSpec {
       HttpFeedSource.fetchFeed(url) // server stopped
     }
     assert(err != null)
+  }
 
-    // DLQ mode (reference parity: at-most-once + dead letter, no retry):
-    // polling the now-dead endpoint records the failure and keeps running
+  test("HTTP poller DLQ: each failed poll leaves one record, the query keeps running") {
+    import graft.streaming.{FeedV2, HttpFeedSource}
+    import scala.jdk.CollectionConverters._
+    // a dead endpoint: a loopback port nothing listens on any more
+    val url = {
+      val sock = new java.net.ServerSocket(0, 1,
+        java.net.InetAddress.getByName("127.0.0.1"))
+      try s"http://127.0.0.1:${sock.getLocalPort}/positions" finally sock.close()
+    }
+
+    // reference parity: a dead letter per failed invocation, and the
+    // stream keeps running
     val dlq = Files.createTempDirectory("graft-dlq").toString
-    val out2 = Files.createTempDirectory("graft-http-out2").toString
-    val ckpt2 = Files.createTempDirectory("graft-http-ckpt2").toString
-    val q2 = HttpFeedSource.pollQuery(spark, url, out2, ckpt2,
+    val out = Files.createTempDirectory("graft-http-out").toString
+    val ckpt = Files.createTempDirectory("graft-http-ckpt").toString
+    val q = HttpFeedSource.pollQueryV2(spark, url, out, ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"),
       dlqPath = Some(dlq))
     try {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def dlqRows(): Long =
-        scala.util.Try(spark.read.parquet(dlq).count()).getOrElse(0L)
-      while (dlqRows() == 0 && System.nanoTime() < deadline) Thread.sleep(200)
-      assert(dlqRows() >= 1, "no DLQ record within 30s")
-      assert(q2.isActive, "stream died despite DLQ mode")
-      val rec = spark.read.parquet(dlq).collect().head
+      def dlqRecords(): Long =
+        scala.util.Try(spark.read.json(dlq).filter(col("url") === url).count())
+          .getOrElse(0L)
+      while (dlqRecords() == 0 && System.nanoTime() < deadline) Thread.sleep(200)
+      assert(dlqRecords() >= 1, "no DLQ record within 30s")
+      assert(q.isActive, "stream died despite DLQ mode")
+      val rec = spark.read.json(dlq).collect().head
       assert(rec.getAs[String]("url") == url)
-    } finally q2.stop()
+      assert(rec.getAs[String]("error").nonEmpty)
+    } finally q.stop()
+
+    def source(dir: java.io.File, dlqPath: Option[String]) = new FeedV2.FeedStream(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        (Map("url" -> url) ++ dlqPath.map("dlqPath" -> _)).asJava), dir.toString)
+    // two failed polls of the same index: two records, neither overwritten
+    val dlq2 = Files.createTempDirectory("graft-dlq2").toFile
+    val withDlq = source(Files.createTempDirectory("graft-http-ckpt2").toFile,
+      Some(dlq2.toString))
+    assert(withDlq.latestOffset().json() == "0" && withDlq.latestOffset().json() == "0")
+    val polls = spark.read.json(dlq2.toString).select("poll_id").collect().map(_.getLong(0))
+    assert(polls.toSeq == Seq(0L, 0L), s"expected one record per failed poll, got $polls")
+    // without dlqPath a failed poll writes nothing: no DLQ dir, no payload
+    val bare = Files.createTempDirectory("graft-http-ckpt3").toFile
+    assert(source(bare, None).latestOffset().json() == "0")
+    assert(bare.list().isEmpty, s"failed poll wrote ${bare.list().mkString(", ")}")
   }
 
   test("graft-feed V2 source: offsets advance only past durable WAL payloads") {
@@ -192,6 +222,13 @@ class StreamingSpec extends SparkSpec {
       // failed poll: offset stays put instead of failing or skipping ahead
       server.stop(0)
       assert(s2.latestOffset().json() == "3", "offset advanced past a failed poll")
+      // the WAL is local-only: a non-local checkpoint is refused up front
+      val nonLocal = intercept[IllegalArgumentException] {
+        new FeedV2.FeedStream(
+          new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+            Map("url" -> url).asJava), "hdfs://nn:8020/ckpt")
+      }
+      assert(nonLocal.getMessage.contains("hdfs://nn:8020/ckpt"))
     } finally scala.util.Try(server.stop(0))
   }
 
@@ -1341,22 +1378,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getDouble(4))).toMap
       assert(s4 == s2, s"torn version dir was served to readers: $s4")
     } finally q.stop()
-  }
-
-  test("stream e2e latency harness measures non-empty poll triggers") {
-    // the Bench-published p50/p95 source: serve a generated feed over
-    // loopback HTTP, poll → decode → enrich → hive-write, and read
-    // per-trigger durations off the engine's progress events
-    // generous bounds: this test shares a session with the whole suite's
-    // accumulated state (checkpoint blocks, listener backlog), so it
-    // verifies the harness MEASURES, not how fast — Bench, which runs
-    // alone, owns the published numbers
-    val (p50, p95, n) =
-      graft.streaming.StreamLatency.measure(spark, triggers = 3,
-        vehicles = 50, deadlineSec = 120)
-    assert(n >= 2, s"expected >= 2 measured triggers, got $n")
-    assert(p50 > 0 && p95 >= p50, s"bad percentiles: p50=$p50 p95=$p95")
-    assert(p95 < 60, s"poll trigger took $p95 s — something is hung")
   }
 
   test("streaming parquet sink writes hive partitions exactly once") {

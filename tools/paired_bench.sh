@@ -8,12 +8,6 @@
 # shas, sf, legs, timestamp — staleness is visible, never implied away).
 #
 # Usage: tools/paired_bench.sh <baseline-sha> [sf_dir] [legs_per_side] [only] [out]
-#   PAIRED_STREAM=1   additionally alternates a STREAM leg per side
-#                     (the bench's e2e-latency + load-scaled throughput
-#                     sweep, no batch catalog) and merges a "stream"
-#                     ratio section — round-11 verdict: stream drift was
-#                     unadjudicated because the paired tool only covered
-#                     the batch catalog.
 #   out               defaults to paired_baseline.json (what graft.Bench
 #                     embeds); targeted adjudication runs should name
 #                     their own file so the embedded full-catalog
@@ -37,44 +31,28 @@ rm -f .wt-paired-*.json
 git worktree add --force $WT "$SHA" >/dev/null
 echo "[paired] building baseline $BASE in $WT"
 # copyResources too: plain `compile` leaves META-INF/services out of the
-# worktree's classes dir, so the graft-feed V2 streaming source is
-# unregistered and every baseline STREAM leg dies DATA_SOURCE_NOT_FOUND
-# (degrading to an empty stream section — how r12's first PAIRED_STREAM
-# run silently lost its stream ratios)
+# worktree's classes dir, so the graft-feed streaming source would be
+# unregistered in the baseline classes
 (cd $WT && sbt -batch "compile; Compile/copyResources" >/dev/null)
 sbt -batch "compile; Compile/copyResources" >/dev/null   # tip classes current
 
-run_leg() { # $1=side(base|tip) $2=leg-index $3=mode(batch|stream)
-  local side=$1 leg=$2 mode=${3:-batch} out classes dir
-  out=$(pwd)/.wt-paired-$side-$mode-$leg.json
+run_leg() { # $1=side(base|tip) $2=leg-index
+  local side=$1 leg=$2 out classes dir
+  out=$(pwd)/.wt-paired-$side-batch-$leg.json
   if [ "$side" = base ]; then classes=$(pwd)/$WT/target/scala-2.13/classes; dir=$WT
   else classes=$(pwd)/target/scala-2.13/classes; dir=.; fi
-  echo "[paired] leg $leg $side $mode"
+  echo "[paired] leg $leg $side"
   # always the TIP's runner (the baseline tree's jrun.sh may predate the
   # GRAFT_CLASSES override); cwd stays in the leg's tree for PLANS.md
-  if [ "$mode" = stream ]; then
-    # stream-only: an allowlist that matches no catalog query skips the
-    # batch passes entirely; the stream block (e2e + throughput) runs
-    (cd $dir && env GRAFT_CLASSES=$classes SPARK_GRAFT_SF_DIR=$SF \
-      SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} \
-      SPARK_GRAFT_BENCH_ONLY=__stream_only__ SPARK_GRAFT_BENCH_FULL=$out \
-      "$ROOT"/tools/jrun.sh graft.Bench >/dev/null)
-  else
-    (cd $dir && env GRAFT_CLASSES=$classes SPARK_GRAFT_SF_DIR=$SF \
-      SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} \
-      SPARK_GRAFT_BENCH_NO_STREAM=1 SPARK_GRAFT_BENCH_FULL=$out \
-      ${ONLY:+SPARK_GRAFT_BENCH_ONLY=$ONLY} \
-      "$ROOT"/tools/jrun.sh graft.Bench >/dev/null)
-  fi
+  (cd $dir && env GRAFT_CLASSES=$classes SPARK_GRAFT_SF_DIR=$SF \
+    SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} SPARK_GRAFT_BENCH_FULL=$out \
+    ${ONLY:+SPARK_GRAFT_BENCH_ONLY=$ONLY} \
+    "$ROOT"/tools/jrun.sh graft.Bench >/dev/null)
 }
 
 for leg in $(seq 1 "$LEGS"); do
-  run_leg base "$leg" batch
-  run_leg tip "$leg" batch
-  if [ -n "${PAIRED_STREAM:-}" ]; then
-    run_leg base "$leg" stream
-    run_leg tip "$leg" stream
-  fi
+  run_leg base "$leg"
+  run_leg tip "$leg"
 done
 
 python3 tools/paired_merge.py "$BASE" "$TIP" "$SF" "$LEGS" \
@@ -89,7 +67,4 @@ print('  total base %.1fs tip %.1fs ratio %.2fx' %
 worst = sorted(d['queries'].items(), key=lambda kv: -kv[1]['ratio'])[:5]
 for k, v in worst:
     print('  %-28s base %6.2f tip %6.2f ratio %.2fx' %
-          (k, v['base'], v['tip'], v['ratio']))
-for k, v in sorted(d.get('stream', {}).items()):
-    print('  stream %-24s base %8.3f tip %8.3f ratio %.2fx' %
           (k, v['base'], v['tip'], v['ratio']))"

@@ -15,26 +15,7 @@ def collect(side):
                 out.setdefault(k, []).append(v)
     return {k: min(v) for k, v in out.items()}
 
-def collect_stream(side):
-    # latency metrics: min across legs (noise only inflates);
-    # throughput rows/s: max across legs (noise only deflates)
-    out = {}
-    for f in glob.glob(f".wt-paired-{side}-stream-*.json"):
-        s = json.load(open(f)).get("stream", {})
-        for k in ("e2e_p50", "e2e_p95", "legacy_p50", "legacy_p95"):
-            if k in s:
-                out.setdefault(k, []).append(s[k])
-        for t in s.get("throughput", []):
-            out.setdefault(f"rps_{t['path']}_{t['vehicles']}", []) \
-               .append(t["rows_per_sec"])
-    return {k: (max(v) if k.startswith("rps_") else min(v))
-            for k, v in out.items()}
-
 base, tip = collect("base"), collect("tip")
-sbase, stip = collect_stream("base"), collect_stream("tip")
-stream = {k: {"base": sbase[k], "tip": stip[k],
-              "ratio": round(stip[k] / sbase[k], 3) if sbase[k] else None}
-          for k in sorted(set(sbase) & set(stip))}
 shared = sorted(set(base) & set(tip))
 queries = {k: {"base": base[k], "tip": tip[k],
                "ratio": round(tip[k] / base[k], 3) if base[k] > 0 else None}
@@ -49,5 +30,4 @@ print(json.dumps({
     "ratio_total": round(tt / tb, 3) if tb else None,
     "only_in_tip": sorted(set(tip) - set(base)),
     "only_in_base": sorted(set(base) - set(tip)),
-    **({"stream": stream} if stream else {}),
     "queries": queries}, indent=None))

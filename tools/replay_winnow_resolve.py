@@ -23,7 +23,7 @@ itself still produced by THE ORACLE'S OWN SQL (everything up to and
 including the `pairs` CTE runs verbatim in DuckDB — spillable
 group-bys and windows, no recursion).
 
-Like replay_graph_sf10.py, the substitution is textual and verified:
+The substitution is textual and verified:
 the script asserts the oracle contains the exact recursive tail it
 replaces, so the union-find provably substitutes the oracle's own
 definition rather than a re-derivation.

@@ -1,9 +1,8 @@
 package graft
 
-import com.fasterxml.jackson.databind.DeserializationFeature
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.json4s.{JObject, JValue}
-import org.json4s.jackson.JsonMethods
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Benchmark main: runs the query catalog on SPARK_GRAFT_SF_DIR and prints
   * ONE JSON line. Each query is fully materialized through the `noop` sink
@@ -12,7 +11,6 @@ import org.json4s.jackson.JsonMethods
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = LocalSession.cpus
     val spark = LocalSession()
 
     // Informational lines go to STDOUT: under sbt, stderr renders as
@@ -21,18 +19,12 @@ object Bench {
     // The contractual JSON line is still the LAST stdout line.
     def info(msg: String): Unit = println(msg)
 
-    // per-query progress so a hung/slow scale run identifies its culprit
-    // from outside (jstack shows the stage, this names it)
-    val progress = sys.env.contains("SPARK_GRAFT_BENCH_PROGRESS")
     def runOne(name: String, fn: (SparkSession, String) => DataFrame,
         dir: String): Double = {
       val t0 = System.nanoTime()
-      if (progress) info(s"[bench] start $name")
       try {
         fn(spark, dir).write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (progress) info(f"[bench] done $name $sec%.2fs")
-        sec
+        (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed on $dir: ${e.getMessage}")
         -1.0
@@ -45,13 +37,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(c => only.forall(_.contains(c._1)))
-
-    // Locale.ROOT formatting everywhere a number reaches JSON: the f
-    // interpolator honors the default locale, and a decimal-comma locale
-    // (de_DE, fr_FR) would render "1,234" — invalid JSON that kills the
-    // driver's parse and scale_table.py alike.
-    def num(v: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
 
     // Warmup pass on the smallest SF: same plan shapes → compiles every
     // wholestage-codegen class and lets the JIT finish before timing, so
@@ -84,8 +69,7 @@ object Bench {
     // few bounded retries, never wrong data. Up to 3 extra passes re-run
     // only the suspect queries, each preceded by a sleep long enough to
     // escape the noise window.
-    val suspectCeiling =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CEILING_SEC", "6").toDouble
+    val suspectCeiling = 6.0
     def pass(names: Seq[String]): Map[String, Double] =
       catalog.filter(c => names.contains(c._1))
         .map { case (name, fn) => name -> runOne(name, fn, sfDir) }.toMap
@@ -122,11 +106,9 @@ object Bench {
       val ss = samples(name)
       val ok = ss.filter(_ >= 0)
       val sec = if (ok.isEmpty) -1.0 else ok.min
-      info(
-        s"[bench] $name ${num(sec, 2)}s (passes ${ss.map(s => num(s, 2)).mkString(" / ")})")
+      info(f"[bench] $name $sec%.2fs (passes ${ss.map(s => f"$s%.2f").mkString(" / ")})")
       name -> sec
     }
-    val total = results.map(_._2).filter(_ >= 0).sum
     // Cold-first-pass record (round-12 verdict transparency ask): pass 1 is
     // the first TIMED run on sfDir — the content caches (winnow/knn/labels)
     // are keyed by dataset content, so the sf0.001 warmup does not warm
@@ -135,102 +117,47 @@ object Bench {
     val pass1 = catalog.map { case (name, _) =>
       name -> samples(name).headOption.filter(_ >= 0).getOrElse(-1.0)
     }
-    val pass1Total = pass1.map(_._2).filter(_ >= 0).sum
-
-    // Plan-generation fingerprint: md5 of the committed PLANS.md (the
-    // graft.Plans artifact), so each bench archive records which plan
-    // shapes produced its numbers — a changed hash round over round says
-    // "diff PLANS.md before comparing timings".
-    val plansMd5 = {
-      val f = java.nio.file.Paths.get("PLANS.md")
-      if (java.nio.file.Files.exists(f))
-        "\"" + graft.ops.ContentKey.md5(
-          new String(java.nio.file.Files.readAllBytes(f), "UTF-8"), 32) + "\""
-      else "null"
-    }
-
-    // Paired-A/B section (round-11): tools/paired_bench.sh runs the
-    // rounds-8/10 drift protocol — baseline sha built in a gitignored
-    // worktree, alternated full legs on one box — and writes
-    // paired_baseline.json. Embedding it here puts the paired ratio
-    // table in the SAME archive the driver reads, self-describing
-    // (shas + timestamp), so stale pairings are visible rather than
-    // implied fresh. Absent file → absent section, never a dead bench.
-    val paired = {
-      val f = java.nio.file.Paths.get("paired_baseline.json")
-      if (!java.nio.file.Files.exists(f)) ""
-      else try {
-        val txt = jsonObject(
-          new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-        s""""paired":$txt,"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] paired section skipped: ${e.getMessage}")
-        ""
-      }
-    }
-
-    // estimator documented in-band: per-query min over 2 full passes plus
-    // up to 3 suspect-retry passes (see the noise model above) — so a
-    // round-over-round delta on an unchanged query is a real plan change,
-    // not a shared-noise-window artifact.
-    //
-    // Two records: the COMPLETE per-query map goes to bench_full.json in
-    // the repo root (the durable, never-truncated record the driver
-    // commits with the round), while STDOUT gets a compact line — the
-    // summary scalars plus only the slowest 20 queries — sized well under
-    // the driver's 2000-char stdout tail, so the per-round BENCH_r{N}.json
-    // archive is parseable end-to-end instead of a truncated 151-query
-    // map (the round-7 lossy-archive finding). A TARGETED run
-    // (SPARK_GRAFT_BENCH_ONLY) must not clobber the full record with a
-    // 3-query line: it writes to bench_targeted.json unless the caller
-    // named a path explicitly.
-    def queriesJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) =>
-        "\"" + k + "\":" + (if (v < 0) "-1" else num(v, 3))
-      }.mkString("{", ",", "}")
-    val summary = s""""metric":"total","value":${num(total, 3)},"unit":"sec","n_queries":${results.size},"estimator":"min_of_2_passes_plus_suspect_retries","pass1_total":${num(pass1Total, 3)},$paired"plans_md5":$plansMd5,"sf":"$sfDir""""
-    val fullLine =
-      s"""{"queries":${queriesJson(results)},"queries_pass1":${queriesJson(pass1)},$summary}"""
-    // stdout keeps the contractual "queries" key, just restricted to the
-    // slowest 20 (the interesting ones); "queries_full" names the file
-    // with the complete map.
-    val slowest = results.sortBy(-_._2).take(20)
+    // A TARGETED run (SPARK_GRAFT_BENCH_ONLY) must not clobber the full
+    // record with a 3-query map: it writes to bench_targeted.json unless
+    // the caller named a path explicitly.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       if (only.isDefined) "bench_targeted.json" else "bench_full.json")
-    val tailLine =
-      s"""{"queries":${queriesJson(slowest)},"queries_full":"$fullPath",$summary}"""
-    def writeLine(path: String, line: String): Unit =
-      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        (line + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $path write failed: ${e.getMessage}")
-      }
-    writeLine(fullPath, fullLine)
-    // A targeted run writes nothing but its own record: the two files
-    // below describe a full-catalog run.
-    if (only.isEmpty) {
-      // Per-(cpus, sf) copy of the full record, so a lower-core scaling
-      // leg never clobbers the main map. The canonical name stays
-      // (last-writer) for existing consumers; this copy survives.
-      val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-      writeLine(s"bench_full_c${cpus}_$sfName.json", fullLine)
-      // The contract line verbatim as a fixed artifact: even if a wrapper
-      // (sbt chrome, tee, CI prefixing) mangles stdout, the identical JSON
-      // is readable here.
-      writeLine("BENCH_LINE.json", tailLine)
+    val (fullLine, tailLine) = lines(results, pass1, sfDir, fullPath)
+    try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
+      (fullLine + "\n").getBytes("UTF-8"))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $fullPath write failed: ${e.getMessage}")
     }
     println(tailLine)
     spark.stop()
   }
 
-  /** `txt`, trimmed, when it is exactly one JSON object — safe to splice
-    * verbatim into the bench line; throws with the reason otherwise (a
-    * truncated file that still ends in '}' would corrupt the whole line). */
-  private[graft] def jsonObject(txt: String): String =
-    JsonMethods.mapper.readerFor(classOf[JValue])
-      .`with`(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
-      .readValue[JValue](txt) match {
-      case _: JObject => txt.trim
-      case _ => sys.error("not a JSON object")
-    }
+  /** The full record and the stdout line, in that order. Per query, the
+    * min over 2 full passes plus up to 3 suspect-retry passes (the noise
+    * model in `main`), so a delta on an unchanged query is a real plan
+    * change, not a shared-noise-window artifact. The full record holds
+    * every query and `queries_pass1`; the stdout line holds the slowest 20
+    * and names the full record in `queries_full`, staying well under the
+    * driver's 2000-char stdout tail. Seconds carry 3 decimals; a failed
+    * query reads -1. */
+  private[graft] def lines(results: Seq[(String, Double)],
+      pass1: Seq[(String, Double)], sfDir: String,
+      fullPath: String): (String, String) = {
+    def sec(v: Double): JValue =
+      if (v < 0) JInt(-1)
+      else JDecimal(new java.math.BigDecimal(v).setScale(3, java.math.RoundingMode.HALF_UP))
+    def queries(rs: Seq[(String, Double)]): JObject =
+      JObject(rs.map { case (k, v) => k -> sec(v) }.toList)
+    def total(rs: Seq[(String, Double)]) = sec(rs.map(_._2).filter(_ >= 0).sum)
+    val summary = List[JField](
+      "metric" -> JString("total"), "value" -> total(results),
+      "unit" -> JString("sec"), "n_queries" -> JInt(results.size),
+      "estimator" -> JString("min_of_2_passes_plus_suspect_retries"),
+      "pass1_total" -> total(pass1), "sf" -> JString(sfDir))
+    val full = JObject(("queries" -> queries(results)) ::
+      ("queries_pass1" -> queries(pass1)) :: summary)
+    val tail = JObject(("queries" -> queries(results.sortBy(-_._2).take(20))) ::
+      ("queries_full" -> JString(fullPath)) :: summary)
+    (compact(render(full)), compact(render(tail)))
+  }
 }

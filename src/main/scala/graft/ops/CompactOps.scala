@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's compaction plane (compaction/runtime/handler.py): rewrite
   * a day's (or month's) many small snappy files into few large zstd-15
@@ -73,6 +74,32 @@ object CompactOps {
   }
 
 
+  /** `inPath`'s data schema from one data file's footer, read on the
+    * driver: the file Spark's non-merging inference would read, without
+    * the inference job. Partition discovery still runs on the read, so a
+    * month's `day=` level stays a column. */
+  private def footerSchema(spark: SparkSession, inPath: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(inPath)
+    val fs = root.getFileSystem(conf)
+    val top = fs.makeQualified(root).toUri.getPath
+    // Spark skips `_`- and `.`-prefixed names (markers, checksums, staging)
+    def visible(p: Path): Boolean = p.toUri.getPath.stripPrefix(top).split('/')
+      .forall(n => !n.startsWith("_") && !n.startsWith("."))
+    val it = fs.listFiles(root, true)
+    val file = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(visible).minByOption(_.toString)
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $inPath"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** Compact `inPath` into `targetFiles` zstd files. Geo tables (those
     * carrying the `bbox` covering struct) default to a z-ordered layout:
     * range-partition the rewrite by the Morton key of the bbox corner and
@@ -90,7 +117,7 @@ object CompactOps {
     // only when the geo layout branch happens to engage
     require(Set("zorder", "hilbert")(geoCurve),
       s"unknown geo curve '$geoCurve' (zorder|hilbert)")
-    val df = spark.read.parquet(inPath)
+    val df = spark.read.schema(footerSchema(spark, inPath)).parquet(inPath)
     // the z path reads bbox.xmin/ymin — engage it only when they exist
     // and are numeric, so an unrelated table that happens to carry a
     // `bbox` struct of its own still compacts instead of failing

@@ -27,39 +27,20 @@ object Flagship {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables(s, dir, n)
 
-  /** The dim columns [[deviationCandidates]] consumes — the contract a
-    * caching tables-provider (the streaming MV's per-trigger dim cache)
-    * may narrow each scan to. Kept NEXT to the pipeline so a column
-    * added there is added here in the same review; a miss fails loudly
-    * at analysis, never silently. */
-  private[graft] val DimCols: Map[String, Seq[String]] = Map(
-    "customer" -> Seq("c_custkey", "c_mktsegment"),
-    "orders" -> Seq("o_orderkey", "o_custkey", "o_orderpriority"),
-    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_linenumber"))
-
   /** Pre-dedup candidate deviations from an EXPLICIT events frame — the
     * single definition of the join/filter/diff pipeline, shared by the
     * batch query and the streaming MV twin
     * ([[graft.streaming.FlagshipStream]]) so the two planes cannot
     * drift. Emits (stop_id, l_orderkey, l_linenumber, event_id, diff).
-    *
-    * `tables` abstracts WHERE the three dim frames come from (default:
-    * the parquet lake via [[Tables]]). Row content is identical for any
-    * provider — only the scan node differs. NOTE the round-12 negative
-    * result in [[graft.streaming.FlagshipStream]]: serving PERSISTED dim
-    * copies here flips the l join off broadcast (in-memory stats exceed
-    * the threshold the pruned parquet estimate stays under) and doubles
-    * the streaming trigger p50 — providers should preserve scan-sized
-    * statistics. */
+    * The dims are plain parquet scans (see the round-12 negative result in
+    * [[graft.streaming.FlagshipStream]] for why they are not persisted). */
   private[graft] def deviationCandidates(s: SparkSession, dir: String,
-      events: DataFrame,
-      tables: (SparkSession, String, String) => DataFrame =
-        (s, d, n) => Tables(s, d, n)): DataFrame = {
-    val c = tables(s, dir, "customer")
+      events: DataFrame): DataFrame = {
+    val c = t(s, dir, "customer")
       .filter(col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")) // C6
-    val o = tables(s, dir, "orders")
+    val o = t(s, dir, "orders")
       .filter(!col("o_orderpriority").rlike("^[45]-")) // C5
-    val l = tables(s, dir, "lineitem").withColumn("sched_sec",
+    val l = t(s, dir, "lineitem").withColumn("sched_sec",
       (col("l_partkey") * 37 + col("l_linenumber") * 601) % 86400)
     val e = events.select(
       col("event_id"), col("user_id"),

@@ -32,7 +32,7 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *    the dir holds only the uncommitted horizon (bounded by trigger
   *    backlog, not stream lifetime);
   *  - a FAILED poll simply does not advance the offset: the trigger
-  *    produces an empty batch and the next one retries — no data loss,
+  *    finds no new data and the next one retries — no data loss,
   *    no spurious failure of the whole query on one network blip. With
   *    `dlqPath` set, each failed poll also leaves one dead-letter record
   *    there, the reference's DLQ for failed invocations.
@@ -43,9 +43,8 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * executor-side filesystem access; durability comes from the WAL, and
   * the decode/enrich/write work downstream is fully distributed.
   *
-  * Options: `url` (required), `apiKeyHeader`/`apiKeyValue`,
-  * `timeoutMs`, `dlqPath`. Schema: (poll_id LONG, fetch_ts_ms LONG,
-  * feed BINARY). The checkpoint and `dlqPath` must be local paths.
+  * Options: `url` (required), `apiKeyHeader`/`apiKeyValue`, `dlqPath`.
+  * Schema: (poll_id LONG, fetch_ts_ms LONG, feed BINARY). The checkpoint and `dlqPath` must be local paths.
   */
 class FeedV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-feed"
@@ -109,8 +108,6 @@ object FeedV2 {
     private val apiKey: Option[(String, String)] =
       Option(options.get("apiKeyHeader"))
         .map(h => h -> String.valueOf(options.get("apiKeyValue")))
-    private val timeoutMs: Int =
-      Option(options.get("timeoutMs")).map(_.toInt).getOrElse(5000)
 
     private val walDir = localDir(
       new org.apache.hadoop.fs.Path(checkpointLocation, "payloads"),
@@ -140,14 +137,17 @@ object FeedV2 {
     override def latestOffset(): Offset = {
       val next = walCount()
       try {
-        val bytes = HttpFeedSource.fetchFeed(url, apiKey, timeoutMs)
+        val bytes = HttpFeedSource.fetchFeed(url, apiKey)
         writeAtomic(walDir, f"$next%020d" + s"_${System.currentTimeMillis()}", bytes)
         FeedOffset(next + 1)
       } catch {
         case e: java.io.IOException =>
-          // poll failure → empty batch, retry next trigger (the offset
-          // only ever advances past durable payloads)
-          logWarning(s"graft-feed poll of $url failed; retrying next trigger", e)
+          // poll failure → no new offset, retry next trigger (the offset
+          // only ever advances past durable payloads). One line, no stack
+          // trace: the cause is the class and message, and a dead feed
+          // fails on every trigger.
+          logWarning(s"graft-feed poll of $url failed (${e.getClass.getName}: " +
+            s"${e.getMessage}); retrying next trigger")
           dlqDir.foreach { dir =>
             val ms = System.currentTimeMillis()
             val rec = ("poll_id" -> next) ~ ("ts" -> ms / 1000L) ~ ("url" -> url) ~

@@ -36,10 +36,11 @@ object FlagshipStream {
 
   // NEGATIVE RESULT (round 12, adjudicating the round-11 ask-#6 commit
   // that persisted the three dim tables across triggers): persisting the
-  // DimCols-projected dims (MEMORY_AND_DISK, materialized at stream
-  // start) DOUBLED the trigger p50 at the 21.3M flagship scale
-  // (6.86 s → 14.77 s, alternated legs on testdata-flagship). Cause, from
-  // the per-trigger plan (plans/r12/flagship_stream_trigger_*.txt): a
+  // dims, narrowed to the columns the pipeline reads (MEMORY_AND_DISK,
+  // materialized at stream start), DOUBLED the trigger p50 at the 21.3M
+  // flagship scale (6.86 s → 14.77 s, alternated legs on
+  // testdata-flagship). Cause, from the per-trigger plan
+  // (plans/r12/flagship_stream_trigger_*.txt, now in git history only): a
   // persisted dim's size estimate is its in-memory stats, which for
   // lineitem exceed the 10 MB auto-broadcast threshold that its pruned
   // PARQUET estimate stayed under — the l join flips
@@ -47,8 +48,8 @@ object FlagshipStream {
   // whole candidate side EVERY trigger. The parquet re-scan the cache
   // was meant to save is served from the OS page cache and was never
   // the floor. Forcing broadcast(l) instead would pin a strategy the
-  // planner must stay free to drop at real scale, so the provider
-  // default (plain parquet scans via Tables) stands.
+  // planner must stay free to drop at real scale, so plain parquet scans
+  // via Tables stand.
 
   private def emptyState(spark: SparkSession): DataFrame =
     spark.createDataFrame(

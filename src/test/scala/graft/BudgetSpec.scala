@@ -42,7 +42,34 @@ class BudgetSpec extends SparkSpec {
 
     val cold = Files.createTempDirectory("graft-budget-cold").toString
     val compact = jobs(CompactOps.compact(spark, day, cold))
-    // the input schema inference, the range-bound sample, the write
-    assert(compact == 3, s"compact ran $compact jobs")
+    // the range-bound sample and the write; the input schema comes from a
+    // footer read on the driver, not an inference job
+    assert(compact == 2, s"compact ran $compact jobs")
+  }
+
+  test("job budget: one poll trigger") {
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+    import graft.streaming.{FeedGen, HttpFeedSource}
+    import org.apache.spark.sql.streaming.Trigger
+    val feed = FeedGen.vehicleFeed(50, 1709650000L) // 2024-03-05 UTC
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/feed", new HttpHandler {
+      override def handle(x: HttpExchange): Unit = {
+        x.sendResponseHeaders(200, feed.length)
+        try x.getResponseBody.write(feed) finally x.close()
+      }
+    })
+    server.start()
+    val lake = Files.createTempDirectory("graft-budget-poll").toString
+    val ckpt = Files.createTempDirectory("graft-budget-poll-ckpt").toString
+    try {
+      // AvailableNow: one poll, one batch, then the query stops
+      val poll = jobs(HttpFeedSource.pollQueryV2(spark,
+        s"http://127.0.0.1:${server.getAddress.getPort}/feed", lake, ckpt,
+        trigger = Trigger.AvailableNow()).awaitTermination())
+      assert(spark.read.parquet(lake).count() == 50)
+      // the lake write, and nothing else
+      assert(poll == 1, s"one poll trigger ran $poll jobs")
+    } finally server.stop(0)
   }
 }

@@ -3,15 +3,13 @@
 # protocol as one command). Builds the baseline sha in a gitignored
 # worktree, then alternates FULL bench legs baseline/tip/baseline/tip...
 # on the same box, so host-noise windows hit both sides equally; the
-# per-query paired ratios land in paired_baseline.json, which graft.Bench
-# embeds as the "paired" section of its next JSON line (self-describing:
-# shas, sf, legs, timestamp — staleness is visible, never implied away).
+# per-query paired ratios land in one standalone JSON record
+# (self-describing: shas, sf, legs, timestamp).
 #
 # Usage: tools/paired_bench.sh <baseline-sha> [sf_dir] [legs_per_side] [only] [out]
-#   out               defaults to paired_baseline.json (what graft.Bench
-#                     embeds); targeted adjudication runs should name
-#                     their own file so the embedded full-catalog
-#                     pairing is not clobbered by a subset.
+#   out               defaults to paired_baseline.json; targeted
+#                     adjudication runs should name their own file so a
+#                     full-catalog pairing is not clobbered by a subset.
 set -euo pipefail
 SHA=$1
 SF=${2:-/root/testdata/sf0.1}
@@ -43,7 +41,7 @@ run_leg() { # $1=side(base|tip) $2=leg-index
   else classes=$(pwd)/target/scala-2.13/classes; dir=.; fi
   echo "[paired] leg $leg $side"
   # always the TIP's runner (the baseline tree's jrun.sh may predate the
-  # GRAFT_CLASSES override); cwd stays in the leg's tree for PLANS.md
+  # GRAFT_CLASSES override)
   (cd $dir && env GRAFT_CLASSES=$classes SPARK_GRAFT_SF_DIR=$SF \
     SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} SPARK_GRAFT_BENCH_FULL=$out \
     ${ONLY:+SPARK_GRAFT_BENCH_ONLY=$ONLY} \

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Merge alternated paired-bench legs (.wt-paired-{base,tip}-N.json,
-written by tools/paired_bench.sh) into the paired_baseline.json section
-graft.Bench embeds. Estimator matches the bench's own: per-query MIN
-across legs per side (noise only inflates), ratio = tip/base."""
+written by tools/paired_bench.sh) into one standalone paired record on
+stdout. Estimator matches the bench's own: per-query MIN across legs per
+side (noise only inflates), ratio = tip/base."""
 import sys, json, glob, time
 
 base_sha, tip_sha, sf, legs = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])

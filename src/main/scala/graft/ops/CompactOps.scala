@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -179,7 +181,16 @@ object CompactOps {
     * back in as a data column, so month files keep day granularity, unlike
     * the reference whose month merge drops it from the schema). Dates with
     * no data are skipped like the reference's "No objects found" path.
-    * Returns the (in, out) partition paths actually compacted. */
+    * Returns the (in, out) partition paths actually compacted, in date
+    * order.
+    *
+    * The partitions are compacted concurrently, on a pool of
+    * min(partitions, defaultParallelism) threads made for this call: a
+    * partition's write is one task, so one at a time would leave the
+    * other cores idle. Every compaction runs to its end before the call
+    * returns or throws, so no job of the window outlives it; if any
+    * failed, the first failure in date order is rethrown as `compact`
+    * threw it. */
   def compactWindow(spark: SparkSession, inRoot: String, outRoot: String,
       previousDays: Option[Int] = None, previousMonths: Option[Int] = None,
       timezone: String = "UTC", compactToNow: Boolean = false,
@@ -192,18 +203,28 @@ object CompactOps {
         "exactly one of previousDays / previousMonths required")
     }
     val conf = spark.sparkContext.hadoopConfiguration
-    datesInRange(duration, timezone, period, compactToNow, now).flatMap { d =>
+    val pairs = datesInRange(duration, timezone, period, compactToNow, now).flatMap { d =>
       val rel =
         if (period == "days")
           s"year=${d.getYear}/month=${d.getMonthValue}/day=${d.getDayOfMonth}"
         else s"year=${d.getYear}/month=${d.getMonthValue}"
       val in = new org.apache.hadoop.fs.Path(s"$inRoot/$rel")
       if (!in.getFileSystem(conf).exists(in)) None
-      else {
-        val out = s"$outRoot/$rel"
-        compact(spark, in.toString, out, targetFiles, sortCols)
-        Some(in.toString -> out)
-      }
+      else Some(in.toString -> s"$outRoot/$rel")
+    }
+    if (pairs.isEmpty) pairs
+    else {
+      val pool = Executors.newFixedThreadPool(
+        math.min(pairs.size, spark.sparkContext.defaultParallelism))
+      try {
+        val runs = pairs.map { case (in, out) =>
+          pool.submit[Unit](() => compact(spark, in, out, targetFiles, sortCols))
+        }
+        // every run ends before any outcome is looked at
+        val outcomes = runs.map(r => Try(r.get()))
+        outcomes.collectFirst { case Failure(e: ExecutionException) => throw e.getCause }
+        pairs
+      } finally pool.shutdownNow()
     }
   }
 }

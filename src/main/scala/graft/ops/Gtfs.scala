@@ -27,14 +27,20 @@ import org.apache.spark.sql.functions._
   */
 object Gtfs {
 
-  /** A3: GTFS CSV scan — inferred schema with the reference's stop_id
-    * string override. */
+  /** FIXTURES.md §2.2's typed GTFS columns; every other column keeps the
+    * string it is in the file. */
+  private val CsvTypes = Map("route_type" -> "int", "stop_sequence" -> "int",
+    "stop_lat" -> "double", "stop_lon" -> "double")
+
+  /** A3: GTFS CSV scan with the reference's fixed column types, matched by
+    * header name (cell 6f866b02's `types={'stop_id':'VARCHAR'}` map). No
+    * schema inference: the header read is the scan's one job, and ids
+    * stay the strings they are in the file, so `"00042"` keeps its zeros
+    * and never collides with a stop `"42"`. */
   def readGtfsCsv(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(path)
-    if (df.columns.contains("stop_id"))
-      df.withColumn("stop_id", col("stop_id").cast("string"))
-    else df
+    val df = spark.read.option("header", "true").csv(path)
+    df.select(df.columns.toSeq.map(c =>
+      CsvTypes.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
   }
 
   /** Seconds-since-midnight of a GTFS "HH:MM:SS" string (may exceed 24 h). */
@@ -55,18 +61,31 @@ object Gtfs {
     * instants are converted to agency wall-clock before the time-of-day
     * diff against the schedule's local "HH:MM:SS" strings. Threaded as a
     * parameter rather than ambient session state so one job can process
-    * many agencies. */
+    * many agencies.
+    *
+    * Join layout: the positions (the fact side) stream across all tasks
+    * and the dims chain is broadcast to them, but only when `stopTimes`'
+    * size estimate is within the session's `autoBroadcastJoinThreshold`
+    * (a negative threshold disables it). The chain has at most as many
+    * rows as stop_times, since route, trip and stop ids are GTFS primary
+    * keys; the planner's own estimate of the joined chain multiplies its
+    * inputs and cannot serve as the guard. Above the threshold the plan
+    * is left to the planner. */
   def scheduleDeviation(routes: DataFrame, trips: DataFrame,
       stopTimes: DataFrame, stops: DataFrame, positions: DataFrame,
       timezone: String = "UTC"): DataFrame = {
-    val dims = routes
+    val chain = routes
       .filter(col("route_type").isin(700, 3)) // C6
       .join(trips, "route_id") // D1
       .join(stopTimes
         .filter(!col("arrival_time").rlike("^(2[4-9]|3[0-5]):")), // C5, 'c'ase-sensitive
         "trip_id")
-      .join(broadcast(stops.withColumn("stop_loc",
-        gf.st_point(col("stop_lon"), col("stop_lat")))), "stop_id") // F4
+      .join(stops.withColumn("stop_loc",
+        gf.st_point(col("stop_lon"), col("stop_lat"))), "stop_id") // F4
+    val threshold = stopTimes.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val dimsFit = threshold >= 0 &&
+      stopTimes.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    val dims = if (dimsFit) broadcast(chain) else chain
     val joined = dims.join(positions,
       dims("trip_id") === positions("trip_id") &&
         gf.st_dwithin(positions("geometry"), dims("stop_loc"), lit(0.0002)), // D2/F5

@@ -91,6 +91,15 @@ object FeedV2 {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** A failure as its class and message, then each cause's (at most 8
+    * levels: a cause chain can loop). A refused connection's
+    * `ConnectException` has no message, so the class is what says what
+    * failed. */
+  private def describe(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+      .map(t => Option(t.getMessage).fold(t.getClass.getName)(m => s"${t.getClass.getName}: $m"))
+      .mkString("; caused by ")
+
   private[graft] case class FeedOffset(polls: Long) extends Offset {
     override def json(): String = polls.toString
   }
@@ -144,14 +153,13 @@ object FeedV2 {
         case e: java.io.IOException =>
           // poll failure → no new offset, retry next trigger (the offset
           // only ever advances past durable payloads). One line, no stack
-          // trace: the cause is the class and message, and a dead feed
-          // fails on every trigger.
-          logWarning(s"graft-feed poll of $url failed (${e.getClass.getName}: " +
-            s"${e.getMessage}); retrying next trigger")
+          // trace: a dead feed fails on every trigger.
+          val error = describe(e)
+          logWarning(s"graft-feed poll of $url failed ($error); retrying next trigger")
           dlqDir.foreach { dir =>
             val ms = System.currentTimeMillis()
             val rec = ("poll_id" -> next) ~ ("ts" -> ms / 1000L) ~ ("url" -> url) ~
-              ("error" -> String.valueOf(e.getMessage))
+              ("error" -> error)
             // the same poll index fails on every retry: the file name
             // keeps each attempt's record
             writeAtomic(dir, f"$next%020d" + s"_${ms}_${java.util.UUID.randomUUID()}.json",

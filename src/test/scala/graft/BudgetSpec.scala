@@ -42,9 +42,20 @@ class BudgetSpec extends SparkSpec {
 
     val cold = Files.createTempDirectory("graft-budget-cold").toString
     val compact = jobs(CompactOps.compact(spark, day, cold))
-    // the range-bound sample and the write; the input schema comes from a
+    // the range shuffle's map stage and the write (a one-partition
+    // RangePartitioner takes no sample); the input schema comes from a
     // footer read on the driver, not an inference job
     assert(compact == 2, s"compact ran $compact jobs")
+  }
+
+  test("job budget: one GTFS CSV read") {
+    val dir = Files.createTempDirectory("graft-budget-gtfs").toFile
+    val f = new java.io.File(dir, "stop_times.txt")
+    Files.write(f.toPath, ("trip_id,stop_id,stop_sequence,arrival_time\n" +
+      "T1,00042,1,08:00:00\nT1,10280,2,08:10:00\n").getBytes("UTF-8"))
+    val read = jobs(graft.ops.Gtfs.readGtfsCsv(spark, f.getPath))
+    // the header line, and no schema-inference scan
+    assert(read == 1, s"readGtfsCsv ran $read jobs")
   }
 
   test("job budget: one poll trigger") {

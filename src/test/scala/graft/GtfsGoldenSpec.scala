@@ -4,6 +4,12 @@ import java.nio.file.Files
 import graft.expr.StatsOps
 import graft.ops.Gtfs
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Golden pipeline test (SURVEY.md §5 item 4 / FIXTURES.md §2): a tiny
@@ -30,7 +36,8 @@ class GtfsGoldenSpec extends SparkSpec {
   private def ts(hms: String) =
     java.sql.Timestamp.valueOf(s"2024-03-05 $hms")
 
-  private lazy val result = {
+  /** (routes, trips, stop_times, stops, positions) */
+  private lazy val fixture = {
     val routes = Seq(("R1", "10", 3), ("R2", "20", 1))
       .toDF("route_id", "route_short_name", "route_type")
     val trips = Seq(("T1", "R1"), ("T2", "R2")).toDF("trip_id", "route_id")
@@ -55,6 +62,11 @@ class GtfsGoldenSpec extends SparkSpec {
       .toDF("trip_id", "ts", "lon", "lat")
       .select(col("trip_id"), col("ts").as("timestamp"),
         graft.expr.functions.st_point(col("lon"), col("lat")).as("geometry"))
+    (routes, trips, stopTimes, stops, positions)
+  }
+
+  private lazy val result = {
+    val (routes, trips, stopTimes, stops, positions) = fixture
     Gtfs.scheduleDeviation(routes, trips, stopTimes, stops, positions)
   }
 
@@ -143,9 +155,66 @@ class GtfsGoldenSpec extends SparkSpec {
       .coalesce(1).write.option("header", "true").csv(s"$dir/stops")
     val back = Gtfs.readGtfsCsv(spark, s"$dir/stops")
     assert(back.schema("stop_id").dataType.typeName == "string")
-    // leading zeros survive ONLY because of the explicit cast-on-load
-    assert(back.filter(col("stop_id") === "00042").count() +
-      back.filter(col("stop_id") === "42").count() >= 1)
+    // leading zeros survive: the id is never read as a number
+    assert(back.filter(col("stop_id") === "00042").count() == 1)
+    assert(back.filter(col("stop_id") === "42").count() == 0)
     assert(back.schema("stop_lat").dataType.typeName == "double")
+  }
+
+  /** Every node of an executed plan, looking through adaptive wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  test("join layout: positions stream against broadcast dims, no broadcast when disabled") {
+    // the fixture as files: dims through readGtfsCsv, positions a parquet scan
+    val dir = Files.createTempDirectory("graft-gtfs-plan").toString
+    val (routes, trips, stopTimes, stops, positions) = fixture
+    Seq("routes" -> routes, "trips" -> trips, "stop_times" -> stopTimes, "stops" -> stops)
+      .foreach { case (n, df) =>
+        df.coalesce(1).write.option("header", "true").csv(s"$dir/$n")
+      }
+    positions.write.parquet(s"$dir/positions")
+    def run(): (Seq[String], Seq[SparkPlan]) = {
+      def dim(n: String) = Gtfs.readGtfsCsv(spark, s"$dir/$n")
+      val dev = Gtfs.scheduleDeviation(dim("routes"), dim("trips"), dim("stop_times"),
+        dim("stops"), spark.read.parquet(s"$dir/positions"))
+      val rows = dev.collect().map(_.toString).toSeq.sorted
+      (rows, nodes(dev.queryExecution.executedPlan))
+    }
+    def isPositionsScan(p: SparkPlan) = p match {
+      case f: FileSourceScanExec => f.relation.fileFormat.isInstanceOf[ParquetFileFormat]
+      case _ => false
+    }
+    val golden = result.collect().map(_.toString).toSeq.sorted
+
+    // default threshold: the st_dwithin join builds the broadcast dims
+    val (rows, plan) = run()
+    assert(rows == golden)
+    val dwithin = plan.collect {
+      case j: BroadcastHashJoinExec if j.condition.exists(_.toString.contains("dwithin")) => j
+    }
+    assert(dwithin.size == 1, plan.mkString("\n"))
+    val (build, stream) = dwithin.head.buildSide match {
+      case BuildLeft => (dwithin.head.left, dwithin.head.right)
+      case BuildRight => (dwithin.head.right, dwithin.head.left)
+    }
+    assert(nodes(build).exists(_.isInstanceOf[FileSourceScanExec]) &&
+      !nodes(build).exists(isPositionsScan))
+    assert(nodes(stream).exists(isPositionsScan))
+    val broadcastScans = plan.collect { case b: BroadcastExchangeLike => nodes(b) }.flatten
+    assert(!broadcastScans.exists(isPositionsScan))
+
+    // a disabled threshold: no broadcast anywhere, same rows
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val (off, offPlan) = run()
+      assert(off == golden)
+      assert(!offPlan.exists(_.isInstanceOf[BroadcastExchangeLike]), offPlan.mkString("\n"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -251,6 +251,64 @@ class IngestCompactSpec extends SparkSpec {
     assert(done2.length == 2) // Feb 27..29 absent; Mar 1, 2 present
   }
 
+  /** 3,000 enriched pings over 2024-03-05..07 (UTC), in 6 input partitions. */
+  private def threeDays = IngestOps.enrich(spark.range(0, 3000, 1, 6).select(
+    concat(lit("trip_"), (col("id") % 7).cast("string")).as("trip_id"),
+    lit("route_1").as("route_id"), lit("0").as("direction_id"),
+    concat(lit("veh_"), col("id").cast("string")).as("vehicle_id"),
+    (lit(43.0) + col("id") / 10000.0).as("latitude"),
+    (lit(-79.7) + col("id") / 10000.0).as("longitude"),
+    lit(0.0).as("bearing"), lit(0.0).as("speed"),
+    (lit(1709650000L) + col("id") % 3 * 86400 + col("id")).as("timestamp")))
+
+  private val threeDayRels = (5 to 7).map(d => s"year=2024/month=3/day=$d")
+  private val threeDayNow = java.time.Instant.parse("2024-03-07T12:00:00Z")
+
+  /** (rows, sum of row hashes): a multiset digest of a table. */
+  private def digest(path: String) = {
+    val df = spark.read.parquet(path)
+    df.select(xxhash64(df.columns.toSeq.map(c => col(s"`$c`")): _*).cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), sum(col("h"))).head().toSeq
+  }
+
+  test("compactWindow: concurrent days come back in date order, each as a sequential compact") {
+    val hot = Files.createTempDirectory("graft-conc-hot").toString
+    val cold = Files.createTempDirectory("graft-conc-cold").toString
+    IngestOps.writeHive(threeDays, hot)
+    val done = CompactOps.compactWindow(spark, hot, cold,
+      previousDays = Some(2), compactToNow = true, now = threeDayNow)
+    assert(done == threeDayRels.map(r => s"$hot/$r" -> s"$cold/$r"))
+    for (r <- threeDayRels) {
+      val seq = Files.createTempDirectory("graft-conc-seq").toString
+      CompactOps.compact(spark, s"$hot/$r", seq)
+      assert(digest(s"$cold/$r") == digest(seq), r)
+      assert(CompactOps.rowGroupStats(spark, s"$cold/$r").map(_._1) ==
+        CompactOps.rowGroupStats(spark, seq).map(_._1), r)
+    }
+  }
+
+  test("compactWindow: a failed day is rethrown after the other days finish, no job left") {
+    val hot = Files.createTempDirectory("graft-fail-hot").toString
+    val cold = Files.createTempDirectory("graft-fail-cold").toString
+    IngestOps.writeHive(threeDays, hot)
+    // the first day gets a corrupt data file; its footer schema still
+    // comes from a good file, so the failure is the scan job's
+    val bad = new java.io.File(s"$hot/${threeDayRels.head}/zz-corrupt.parquet")
+    Files.write(bad.toPath, "not parquet".getBytes("UTF-8"))
+    val err = intercept[Exception] {
+      CompactOps.compactWindow(spark, hot, cold,
+        previousDays = Some(2), compactToNow = true, now = threeDayNow)
+    }
+    // the scan's own error, not the pool's ExecutionException around it
+    assert(err.isInstanceOf[org.apache.spark.SparkException], err)
+    assert(err.getMessage.contains(bad.getName), err)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    for (r <- threeDayRels.tail) {
+      assert(new java.io.File(s"$cold/$r/_SUCCESS").exists(), r)
+      assert(digest(s"$cold/$r") == digest(s"$hot/$r"), r)
+    }
+  }
+
   test("compactWindow monthly path folds day partitions into month files") {
     import java.time.Instant
     val daily = Files.createTempDirectory("graft-mon-daily").toString

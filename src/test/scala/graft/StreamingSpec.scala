@@ -148,7 +148,9 @@ class StreamingSpec extends SparkSpec {
       assert(q.isActive, "stream died despite DLQ mode")
       val rec = spark.read.json(dlq).collect().head
       assert(rec.getAs[String]("url") == url)
-      assert(rec.getAs[String]("error").nonEmpty)
+      // a refused connection has no message: the record names the class
+      val error = rec.getAs[String]("error")
+      assert(error.contains("ConnectException") && error != "null", error)
     } finally q.stop()
 
     def source(dir: java.io.File, dlqPath: Option[String]) = new FeedV2.FeedStream(

@@ -10,9 +10,7 @@ import org.apache.spark.sql.SparkSession
   * Normalization strips the run-dependent noise: expression IDs (`#123`),
   * `plan_id`s, absolute data/derived paths, and content-addressed
   * artifact keys. Plans are captured at sf0.001 (plan SHAPE is the
-  * artifact; sizes are Bench's job). `graft.Bench` prints the md5 of the
-  * committed file in its JSON line so the driver's bench archive records
-  * which plan generation each number belongs to.
+  * artifact; sizes are Bench's job).
   *
   * Usage: `tools/jrun.sh graft.Plans <sfDir> [outFile]`.
   */

@@ -19,11 +19,11 @@ private[graft] object ContentKey {
 
   /** Persist a small derived frame (hash signatures, perceptual hashes,
     * ANN index assignments) to a content-keyed tmp table for a DuckDB
-    * oracle mirror, record the path in `ref`, and read the table back —
-    * so the downstream relational logic provably consumes the very rows
-    * the oracle reads. Oracle maps embedding these paths must be `def`s:
-    * Verify dumps oracle_sql.json AFTER the queries ran, so the recorded
-    * path always matches the compared run.
+    * oracle mirror, record the path under `sub` for [[oracleFrame]], and
+    * read the table back — so the downstream relational logic provably
+    * consumes the very rows the oracle reads. Oracle maps embedding these
+    * paths must be `def`s: Verify dumps oracle_sql.json AFTER the queries
+    * ran, so the recorded path always matches the compared run.
     *
     * Write-once per dataset content: an index/signature table is built
     * once and queried many times — within a JVM the write is skipped when
@@ -45,15 +45,17 @@ private[graft] object ContentKey {
   private val persistMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Deterministic persisted-frame location for (source dir, sub-table):
-    * where [[persistForOracle]] writes. Exposed so a content-cache HIT —
-    * which skips the compute path's persist calls — can still re-point an
-    * oracle-path registry at the dir actually being served. */
-  def oraclePath(dir: String, sub: String): String =
+  /** The oracle-frame registry: sub-table name → the persisted-frame path
+    * of the dir whose query last ran (or was last served from a content
+    * cache). Sub names are unique across the op modules. */
+  private val oracleFrames =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Deterministic persisted-frame location for (source dir, sub-table). */
+  private def oraclePath(dir: String, sub: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_oracle/${md5(dir)}/$sub"
 
   def persistForOracle(s: SparkSession, dir: String, sub: String,
-      ref: java.util.concurrent.atomic.AtomicReference[String],
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val path = oraclePath(dir, sub)
     val key = s"${of(s, Seq(dir))}/$sub"
@@ -71,9 +73,25 @@ private[graft] object ContentKey {
           persistedKeys.add(key) // only a COMPLETED write marks the key
         }
       }
-    ref.set(path)
+    oracleFrames.put(sub, path)
     s.read.parquet(path)
   }
+
+  /** The persisted frame a mirror reads for `sub`: the path recorded when
+    * its query last ran, or an `unset` path (which fails the mirror
+    * loudly) if no query persisted it in this JVM. */
+  def oracleFrame(sub: String): String =
+    Option(oracleFrames.get(sub)).getOrElse(
+      s"${System.getProperty("java.io.tmpdir")}/graft_oracle/unset/$sub")
+
+  /** A content-cache HIT skips the compute path's [[persistForOracle]]
+    * calls, but the oracle dump must still name THIS dir's frames — the
+    * registry otherwise keeps describing whichever dir ran last, and a
+    * multi-dir session (dirA → dirB → dirA-hit) would dump dirA's mirrors
+    * pointing at dirB's frames. Re-points `subs` at `dir`'s deterministic
+    * locations; idempotent, so cache sites call it on hit and miss alike. */
+  def pointOracleFrames(dir: String, subs: Seq[String]): Unit =
+    subs.foreach(sub => oracleFrames.put(sub, oraclePath(dir, sub)))
 
   /** Content key additionally scoped to the live SparkContext
     * (applicationId + startTime — a restarted context changes both).
@@ -177,6 +195,39 @@ private[graft] object ContentKey {
       val l = ch.lock()
       try body finally l.release()
     } finally ch.close()
+  }
+
+  /** JVM-local monitors for [[derivedDir]], one per source's parent dir:
+    * [[withDirLock]] needs its caller to hold one. */
+  private val dirMonitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Build or adopt the derived dir of `family` for the source `dir`:
+    * `tmp/graft_<family>/<md5(dir)>/<key of sources>`, so a regenerated
+    * source lands in a new key dir and its stale siblings are evicted
+    * instead of accumulating. A dir whose manifest is intact is adopted
+    * as-is (a warm tmp dir from an earlier JVM included); otherwise
+    * `write(path)` rebuilds it and a new manifest is recorded. Returns the
+    * path. */
+  def derivedDir(s: SparkSession, family: String, dir: String,
+      sources: Seq[String])(write: String => Unit): String = {
+    val parent = new java.io.File(
+      s"${System.getProperty("java.io.tmpdir")}/graft_$family/${md5(dir)}")
+    val key = of(s, sources)
+    val root = new java.io.File(parent, key)
+    dirMonitors.computeIfAbsent(parent.getPath, _ => new Object).synchronized {
+      // fast path without the cross-process lock; the authoritative
+      // re-check happens under it (another JVM may finish while we wait)
+      if (!manifestOk(root))
+        withDirLock(parent, key) {
+          if (!manifestOk(root)) { // _SUCCESS alone ≠ integrity
+            evictStale(parent, key)
+            write(root.toString)
+            writeManifest(root)
+          }
+        }
+    }
+    root.toString
   }
 
   /** The standard onEvict for DataFrame-valued caches: free the

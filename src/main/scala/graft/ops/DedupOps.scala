@@ -5,6 +5,7 @@ import graft.expr.{functions => gf}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftSqlBridge
+import ContentKey.oracleFrame
 
 /** Deduplication operators for the training-data pipeline: exact (hash
   * groupBy), MinHash+LSH (shingle → signature → band → bucket equi-join),
@@ -108,11 +109,8 @@ object DedupOps {
   private val Bands = 8
   private val Rows = K / Bands
 
-  private val minhashOraclePath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_oracle/unset/minhash")
-
   private def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val docs = ContentKey.persistForOracle(s, dir, "minhash", minhashOraclePath,
+    val docs = ContentKey.persistForOracle(s, dir, "minhash",
       t(s, dir, "documents")
         .select(col("doc_id"), gf.minhash(col("text"), lit(K), lit(2)).as("sig")))
     val bands = docs.select(col("doc_id"), col("sig"),
@@ -135,7 +133,7 @@ object DedupOps {
 
   private def minhashLshSql: String =
     s"""WITH h AS (
-       |  SELECT doc_id, sig FROM read_parquet('${minhashOraclePath.get}/*.parquet')),
+       |  SELECT doc_id, sig FROM read_parquet('${oracleFrame("minhash")}/*.parquet')),
        |bands AS (
        |  SELECT doc_id, sig,
        |    b.band, sig[b.band * $Rows + 1 : b.band * $Rows + $Rows] AS bkey
@@ -160,11 +158,8 @@ object DedupOps {
   // relational: the computed (doc_id, sh) frame persists to a
   // content-keyed tmp table and the whole band pipeline is mirrored in
   // SQL over it (the media-dedup pattern) — exact, not rows-only.
-  private val simhashOraclePath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_oracle/unset/simhash")
-
   private def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val docs = ContentKey.persistForOracle(s, dir, "simhash", simhashOraclePath,
+    val docs = ContentKey.persistForOracle(s, dir, "simhash",
       t(s, dir, "documents")
         .select(col("doc_id"), gf.simhash(col("text"), lit(2)).as("sh")))
     val bands = docs.select(col("doc_id"), col("sh"),
@@ -186,7 +181,7 @@ object DedupOps {
 
   private def simhashSql: String =
     s"""WITH h AS (
-       |  SELECT doc_id, sh FROM read_parquet('${simhashOraclePath.get}/*.parquet')),
+       |  SELECT doc_id, sh FROM read_parquet('${oracleFrame("simhash")}/*.parquet')),
        |bands AS (
        |  SELECT doc_id, sh, b.band, (sh >> (b.band * 16)) & 65535 AS bkey
        |  FROM h, (SELECT unnest([0, 1, 2, 3]) AS band) b),
@@ -265,7 +260,6 @@ object DedupOps {
     // the DuckDB mirror replays the identical pair join — this query is
     // exact-oracled, only the quantizer kernel stays Spark-side
     val cells = ContentKey.persistForOracle(s, dir, "dedup_cells",
-      dedupCellsPath,
       normed(s, dir).select(col("vec_id"),
         explode(SimilarityOps.miningCells(s, model, col("embedding"),
           SimilarityOps.PairAssign)).as("cell")))
@@ -293,13 +287,10 @@ object DedupOps {
       .filter(col("cos_sim") >= 0.35)
   }
 
-  private val dedupCellsPath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_oracle/unset/dedup_cells")
-
   private def embeddingAnnSql: String =
     s"""WITH n AS ($normedSql),
        |cells AS (
-       |  SELECT * FROM read_parquet('${dedupCellsPath.get}/*.parquet')),
+       |  SELECT * FROM read_parquet('${oracleFrame("dedup_cells")}/*.parquet')),
        |cand AS (
        |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
        |  FROM cells a JOIN cells b
@@ -326,30 +317,26 @@ object DedupOps {
     new ContentKey.Lru[DataFrame](16, ContentKey.freeOnEvict("pairCache"))
 
   private def cachedPairs(s: SparkSession, dir: String, table: String,
-      leg: String, rePoint: String => Unit)(compute: => DataFrame): DataFrame = {
+      leg: String, subs: Seq[String])(compute: => DataFrame): DataFrame = {
     val df = pairCache.get(
       s"${ContentKey.ofScoped(s, Seq(s"$dir/$table.parquet"))}/$leg")(
       compute.localCheckpoint())
     // a HIT skips the compute path's persistForOracle call, but the leg's
-    // mirror still reads the persisted frame — re-point its path ref at
-    // THIS dir's deterministic location on every get (hit and miss alike)
-    rePoint(dir)
+    // mirror still reads the persisted frame: re-point it on every get
+    ContentKey.pointOracleFrames(dir, subs)
     df
   }
 
   private def ngramJaccardC(s: SparkSession, dir: String): DataFrame =
-    cachedPairs(s, dir, "documents", "ngram", _ => ())(ngramJaccard(s, dir))
+    cachedPairs(s, dir, "documents", "ngram", Nil)(ngramJaccard(s, dir))
   private def minhashLshC(s: SparkSession, dir: String): DataFrame =
-    cachedPairs(s, dir, "documents", "minhash",
-      d => minhashOraclePath.set(ContentKey.oraclePath(d, "minhash")))(
+    cachedPairs(s, dir, "documents", "minhash", Seq("minhash"))(
       minhashLsh(s, dir))
   private def simhashPairsC(s: SparkSession, dir: String): DataFrame =
-    cachedPairs(s, dir, "documents", "simhash",
-      d => simhashOraclePath.set(ContentKey.oraclePath(d, "simhash")))(
+    cachedPairs(s, dir, "documents", "simhash", Seq("simhash"))(
       simhashPairs(s, dir))
   private def embeddingCosineAnnC(s: SparkSession, dir: String): DataFrame =
-    cachedPairs(s, dir, "embeddings", "emb_ann",
-      d => dedupCellsPath.set(ContentKey.oraclePath(d, "dedup_cells")))(
+    cachedPairs(s, dir, "embeddings", "emb_ann", Seq("dedup_cells"))(
       embeddingCosineAnn(s, dir))
 
   // End-to-end dedup keep-set: the pair generators above emit candidate
@@ -1075,25 +1062,20 @@ object DedupOps {
       .select(col("doc_id"), col("m_id").as("dup_of"), col("est_sim"))
   }
 
-  private val incrBasePath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_oracle/unset/incr_base")
-  private val incrDeltaPath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_oracle/unset/incr_delta")
-
   private def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val sigs = minhashSigs(t(s, dir, "documents"), "doc_id", "text")
-    val base = ContentKey.persistForOracle(s, dir, "incr_base", incrBasePath,
+    val base = ContentKey.persistForOracle(s, dir, "incr_base",
       sigs.filter(col("doc_id") % 10 < IncrBaseMod))
-    val delta = ContentKey.persistForOracle(s, dir, "incr_delta", incrDeltaPath,
+    val delta = ContentKey.persistForOracle(s, dir, "incr_delta",
       sigs.filter(col("doc_id") % 10 >= IncrBaseMod))
     incrVerdicts(delta, base).orderBy("doc_id")
   }
 
   private def dedupIncrementalSql: String =
     s"""WITH b0 AS (
-       |  SELECT doc_id, sig FROM read_parquet('${incrBasePath.get}/*.parquet')),
+       |  SELECT doc_id, sig FROM read_parquet('${oracleFrame("incr_base")}/*.parquet')),
        |d0 AS (
-       |  SELECT doc_id, sig FROM read_parquet('${incrDeltaPath.get}/*.parquet')),
+       |  SELECT doc_id, sig FROM read_parquet('${oracleFrame("incr_delta")}/*.parquet')),
        |ix AS (SELECT * FROM b0 UNION ALL SELECT * FROM d0),
        |qb AS (
        |  SELECT doc_id, sig,

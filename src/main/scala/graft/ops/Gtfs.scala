@@ -1,9 +1,12 @@
 package graft.ops
 
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
 import graft.expr.{functions => gf}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The reference's flagship program on its REAL schemas — GTFS static CSVs
   * + realtime positions — reproducing notebooks/schedule_deviation.ipynb
@@ -34,13 +37,39 @@ object Gtfs {
 
   /** A3: GTFS CSV scan with the reference's fixed column types, matched by
     * header name (cell 6f866b02's `types={'stop_id':'VARCHAR'}` map). No
-    * schema inference: the header read is the scan's one job, and ids
-    * stay the strings they are in the file, so `"00042"` keeps its zeros
-    * and never collides with a stop `"42"`. */
+    * schema inference and no header job: the header comes from the
+    * file's first line on the driver, every column is read as a string,
+    * so ids stay the strings they are in the file — `"00042"` keeps its
+    * zeros and never collides with a stop `"42"`. */
   def readGtfsCsv(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.option("header", "true").csv(path)
-    df.select(df.columns.toSeq.map(c =>
-      CsvTypes.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+    val header = csvHeader(spark, path)
+    spark.read.option("header", "true")
+      .schema(StructType(header.map(StructField(_, StringType))))
+      .csv(path)
+      .select(header.toSeq.map(c =>
+        CsvTypes.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+  }
+
+  /** Column names of the plain-text CSV at `path` — a file, or a dir whose
+    * first data file is read — parsed from its first line as Spark's CSV
+    * reader would (BOM dropped, quotes honoured, whitespace kept, a blank
+    * name → `_c<i>`). */
+  private def csvHeader(spark: SparkSession, path: String): Array[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) p
+      else fs.listStatus(p).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .minBy(_.getName)
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(fs.open(file), "UTF-8"))
+    val line = try in.readLine() finally in.close()
+    val settings = new CsvParserSettings
+    settings.setIgnoreLeadingWhitespaces(false)
+    settings.setIgnoreTrailingWhitespaces(false)
+    new CsvParser(settings).parseLine(line.stripPrefix("\uFEFF")).zipWithIndex
+      .map { case (h, i) => Option(h).getOrElse(s"_c$i") }
   }
 
   /** Seconds-since-midnight of a GTFS "HH:MM:SS" string (may exceed 24 h). */

@@ -159,31 +159,12 @@ object IngestOps {
   // row-group stats are selective), then the query proper is a
   // pruned-scan → aggregate. The oracle computes the identical filter
   // from the raw events arithmetic, so the match is exact.
-  private val geoLakeLock = new Object
-  private[ops] def geoLake(s: SparkSession, dir: String): String = {
-    // content-addressed (ContentKey): regenerated test data invalidates
-    // the lake; one parent dir per SOURCE, one subdir per content key,
-    // stale keys evicted instead of accumulating in tmp
-    val parent = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_geolake/${ContentKey.md5(dir)}")
-    val key = ContentKey.of(s, Seq(s"$dir/events.parquet"))
-    val root = new java.io.File(parent, key)
-    geoLakeLock.synchronized {
-      // fast path without the cross-process lock; the authoritative
-      // re-check happens under it (another JVM may finish while we wait)
-      if (!ContentKey.manifestOk(root))
-        ContentKey.withDirLock(parent, key) {
-          if (!ContentKey.manifestOk(root)) { // _SUCCESS alone ≠ integrity
-            ContentKey.evictStale(parent, key)
-            enrich(decode(Tables(s, dir, "events")))
-              .sortWithinPartitions(col("bbox.xmin"))
-              .write.mode("overwrite").parquet(root.toString)
-            ContentKey.writeManifest(root)
-          }
-        }
+  private[ops] def geoLake(s: SparkSession, dir: String): String =
+    ContentKey.derivedDir(s, "geolake", dir, Seq(s"$dir/events.parquet")) { root =>
+      enrich(decode(Tables(s, dir, "events")))
+        .sortWithinPartitions(col("bbox.xmin"))
+        .write.mode("overwrite").parquet(root)
     }
-    root.toString
-  }
 
   private def bboxPrune(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(geoLake(s, dir))

@@ -375,29 +375,12 @@ object LayoutOps {
   // dynamicpruning filter actually reaches the scan. The oracle computes
   // the identical semantics from the raw events.
 
-  private val dayLakeLock = new Object
-
-  private[ops] def dayLake(s: SparkSession, dir: String): String = {
-    val parent = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_daylake/${ContentKey.md5(dir)}")
-    val key = ContentKey.of(s, Seq(s"$dir/events.parquet"))
-    val root = new java.io.File(parent, key)
-    dayLakeLock.synchronized {
-      // fast path without the cross-process lock; the authoritative
-      // re-check happens under it (another JVM may finish while we wait)
-      if (!ContentKey.manifestOk(root))
-        ContentKey.withDirLock(parent, key) {
-          if (!ContentKey.manifestOk(root)) { // _SUCCESS alone ≠ integrity
-            ContentKey.evictStale(parent, key)
-            Tables(s, dir, "events")
-              .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-              .write.mode("overwrite").partitionBy("day").parquet(root.toString)
-            ContentKey.writeManifest(root)
-          }
-        }
+  private[ops] def dayLake(s: SparkSession, dir: String): String =
+    ContentKey.derivedDir(s, "daylake", dir, Seq(s"$dir/events.parquet")) { root =>
+      Tables(s, dir, "events")
+        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+        .write.mode("overwrite").partitionBy("day").parquet(root)
     }
-    root.toString
-  }
 
   private def dppJoin(s: SparkSession, dir: String): DataFrame = {
     val lake = s.read.parquet(dayLake(s, dir))

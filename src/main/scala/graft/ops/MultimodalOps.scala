@@ -463,31 +463,16 @@ object MultimodalOps {
   // and mirror bandedHamPairs in SQL over read_parquet of that table —
   // upgrading both media dedups from rows-only to exact on the whole
   // band-extract → pigeonhole self-join → hamming filter pipeline. The
-  // oracle defs read the path refs AFTER the queries ran (Verify dumps
+  // oracle defs read the frame paths AFTER the queries ran (Verify dumps
   // oracle_sql.json last), so the SQL always points at the frame the
   // compared run actually used.
-
-  private val phashOraclePath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_media/unset/phash")
-  private val dctOraclePath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_media/unset/dct")
-  private val audioOraclePath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_media/unset/audio")
-
-  /** Persist the hash frame for the DuckDB mirror and read it back, so
-    * the band-join provably consumes the very rows the oracle sees
-    * (the shared [[ContentKey.persistForOracle]] plumbing). */
-  private def persistHashes(s: SparkSession, dir: String, sub: String,
-      ref: java.util.concurrent.atomic.AtomicReference[String],
-      hashes: DataFrame): DataFrame =
-    ContentKey.persistForOracle(s, dir, sub, ref, hashes)
 
   /** SQL twin of [[bandedHamPairs]]: DuckDB's arithmetic `>>` equals
     * Spark's shiftrightunsigned once masked to the low 16 bits, and the
     * hamming kernel is bit_count over xor — all-integer end to end. */
-  private def bandedHamPairsSql(path: String, maxHam: Int): String =
+  private def bandedHamPairsSql(sub: String, maxHam: Int): String =
     s"""WITH h AS (
-       |  SELECT doc_id, ahash FROM read_parquet('$path/*.parquet')),
+       |  SELECT doc_id, ahash FROM read_parquet('${ContentKey.oracleFrame(sub)}/*.parquet')),
        |bands AS (
        |  SELECT doc_id, ahash, b.band,
        |    (ahash >> (b.band * 16)) & 65535 AS key
@@ -513,7 +498,7 @@ object MultimodalOps {
       })
       .toDF("doc_id", "ahash")
     bandedHamPairs(
-      persistHashes(s, dir, "phash", phashOraclePath, hashes), PhashMaxHam)
+      ContentKey.persistForOracle(s, dir, "phash", hashes), PhashMaxHam)
   }
 
   private def dctDedup(s: SparkSession, dir: String): DataFrame = {
@@ -526,7 +511,7 @@ object MultimodalOps {
       })
       .toDF("doc_id", "ahash")
     bandedHamPairs(
-      persistHashes(s, dir, "dct", dctOraclePath, hashes), PhashMaxHam)
+      ContentKey.persistForOracle(s, dir, "dct", hashes), PhashMaxHam)
   }
 
   /** Deterministic mono 16-bit WAV for a document: a sequence of short
@@ -605,7 +590,7 @@ object MultimodalOps {
       })
       .toDF("doc_id", "ahash")
     bandedHamPairs(
-      persistHashes(s, dir, "audio", audioOraclePath, hashes), PhashMaxHam)
+      ContentKey.persistForOracle(s, dir, "audio", hashes), PhashMaxHam)
   }
 
   // ---- audio silence-split segmentation (VAD-style) ----
@@ -656,9 +641,6 @@ object MultimodalOps {
     */
   private val SegWindows = 64
 
-  private val audioSegOraclePath = new java.util.concurrent.atomic.AtomicReference(
-    s"${System.getProperty("java.io.tmpdir")}/graft_media/unset/audio_energy")
-
   private def audioSegments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -672,8 +654,7 @@ object MultimodalOps {
           })
       })
       .toDF("doc_id", "win", "e")
-    val persisted = ContentKey.persistForOracle(
-      s, dir, "audio_energy", audioSegOraclePath, energies)
+    val persisted = ContentKey.persistForOracle(s, dir, "audio_energy", energies)
     val wd = Window.partitionBy("doc_id")
     val active = persisted
       .withColumn("thr", expr(s"(sum(e) OVER (PARTITION BY doc_id) DIV $SegWindows) DIV 2"))
@@ -694,7 +675,7 @@ object MultimodalOps {
   private def audioSegmentsSql: String =
     s"""WITH en AS (
        |  SELECT doc_id, win, e
-       |  FROM read_parquet('${audioSegOraclePath.get}/*.parquet')),
+       |  FROM read_parquet('${ContentKey.oracleFrame("audio_energy")}/*.parquet')),
        |act AS (
        |  SELECT doc_id, win, e,
        |    row_number() OVER (PARTITION BY doc_id ORDER BY win) AS rn
@@ -719,9 +700,9 @@ object MultimodalOps {
     "media_audio_segments" -> (audioSegments _),
     "multimodal_features" -> (features _),
     "multimodal_frames" -> (framesQ _),
-    // band-join oracled over the persisted hash frames (see
-    // persistHashes); the codec kernels themselves are pinned by
-    // MultimodalSpec's planted near-identical real media
+    // band-join oracled over the persisted hash frames; the codec
+    // kernels themselves are pinned by MultimodalSpec's planted
+    // near-identical real media
     "media_phash_dedup" -> (phashDedup _),
     "media_dcthash_dedup" -> (dctDedup _),
     "media_audio_dedup" -> (audioDedup _))
@@ -732,7 +713,7 @@ object MultimodalOps {
     "media_audio_segments" -> audioSegmentsSql,
     "multimodal_features" -> featuresSql,
     "multimodal_frames" -> framesSql,
-    "media_phash_dedup" -> bandedHamPairsSql(phashOraclePath.get, PhashMaxHam),
-    "media_dcthash_dedup" -> bandedHamPairsSql(dctOraclePath.get, PhashMaxHam),
-    "media_audio_dedup" -> bandedHamPairsSql(audioOraclePath.get, PhashMaxHam))
+    "media_phash_dedup" -> bandedHamPairsSql("phash", PhashMaxHam),
+    "media_dcthash_dedup" -> bandedHamPairsSql("dct", PhashMaxHam),
+    "media_audio_dedup" -> bandedHamPairsSql("audio", PhashMaxHam))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import ContentKey.oracleFrame
 
 /** Similarity search over the embedding column: brute-force cosine top-k
   * (the exactness baseline, oracle-checked) and LSH / IVF / IVF-PQ
@@ -33,34 +34,6 @@ object SimilarityOps {
 
   private val TopK = 5
   private[ops] val NQueries = 8 // query set: vec_id < 8
-
-  /** Persisted-frame registry for the oracle mirrors: sub-table name →
-    * parquet path recorded when the owning query last ran ([[oracle]] is a
-    * `def`; Verify dumps oracle SQL after the queries, so the embedded
-    * paths always describe the compared run). */
-  private val oraclePaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def persistO(s: SparkSession, dir: String, sub: String,
-      df: DataFrame): DataFrame = {
-    val ref = new java.util.concurrent.atomic.AtomicReference[String]()
-    val out = ContentKey.persistForOracle(s, dir, sub, ref, df)
-    oraclePaths.put(sub, ref.get)
-    out
-  }
-
-  private def pth(sub: String): String =
-    Option(oraclePaths.get(sub)).getOrElse(
-      s"${System.getProperty("java.io.tmpdir")}/graft_oracle/unset/$sub")
-
-  /** A content-cache HIT skips the compute path's [[persistO]] calls, but
-    * the oracle dump must still embed THIS run's persisted-frame paths —
-    * the registry otherwise keeps describing whichever dir ran LAST, and a
-    * multi-dir session (dirA → dirB → dirA-hit) would dump dirA's mirrors
-    * pointing at dirB's frames. Re-point at the deterministic per-dir
-    * locations; idempotent, so callers run it on hit and miss alike. */
-  private def reRegisterO(dir: String, subs: String*): Unit =
-    subs.foreach(sub => oraclePaths.put(sub, ContentKey.oraclePath(dir, sub)))
 
   /** Exact cosine over a distinct (q_id, c_id) candidate frame — the
     * shared tail of both ANN query types (top-k rank and radius range):
@@ -189,11 +162,11 @@ object SimilarityOps {
     val e = normed(s, dir)
     // ids-only index (c_id, tab, bucket) — NTables entries per vector of
     // a few ints each, vs NTables embedding copies if vectors rode along
-    val idx = persistO(s, dir, "lsh_idx",
+    val idx = ContentKey.persistForOracle(s, dir, "lsh_idx",
       e.select(col("vec_id").as("c_id"), buckets(col("embedding")))
         .withColumnRenamed("pos", "tab")
         .withColumnRenamed("col", "bucket"))
-    val pr = persistO(s, dir, "lsh_probe",
+    val pr = ContentKey.persistForOracle(s, dir, "lsh_probe",
       e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q_id"),
           queryProbes(col("embedding")).as("probe"))
@@ -205,8 +178,8 @@ object SimilarityOps {
   }
 
   private def lshSql: String = rankPairsSql(
-    s"""idx AS (SELECT * FROM read_parquet('${pth("lsh_idx")}/*.parquet')),
-       |pr AS (SELECT * FROM read_parquet('${pth("lsh_probe")}/*.parquet')),
+    s"""idx AS (SELECT * FROM read_parquet('${oracleFrame("lsh_idx")}/*.parquet')),
+       |pr AS (SELECT * FROM read_parquet('${oracleFrame("lsh_probe")}/*.parquet')),
        |cand AS (
        |  SELECT DISTINCT pr.q_id, idx.c_id
        |  FROM pr JOIN idx USING (tab, bucket)
@@ -637,7 +610,7 @@ object SimilarityOps {
   private def probedCells(s: SparkSession, dir: String): DataFrame = {
     val (dim, cmat, probe) = fitCentroids(s, dir)
     val cLit = typedLit(cmat.toSeq)
-    persistO(s, dir, "ivf_probe",
+    ContentKey.persistForOracle(s, dir, "ivf_probe",
       normed(s, dir).filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q_id"),
           explode(gf.ivf_cells(col("embedding"), cLit, lit(dim), lit(probe)))
@@ -664,7 +637,8 @@ object SimilarityOps {
     * persisted under one sub-table so every consumer's mirror (plain IVF,
     * MMR) reads the same frame. */
   private def ivfIndex(s: SparkSession, dir: String): DataFrame =
-    persistO(s, dir, "ivf_idx", indexAssign(s, dir, normed(s, dir)))
+    ContentKey.persistForOracle(s, dir, "ivf_idx",
+      indexAssign(s, dir, normed(s, dir)))
 
   /** Probe ⋈ index candidate pairs (q_id, c_id) over an arbitrary index
     * frame — the union-over-probed-cells IVF candidate semantics (self
@@ -686,14 +660,14 @@ object SimilarityOps {
 
   private def ivfCandSqlFrom(idxCte: String, name: String = "cand"): String =
     s"""idx AS ($idxCte),
-       |pr AS (SELECT * FROM read_parquet('${pth("ivf_probe")}/*.parquet')),
+       |pr AS (SELECT * FROM read_parquet('${oracleFrame("ivf_probe")}/*.parquet')),
        |$name AS (
        |  SELECT DISTINCT pr.q_id, idx.c_id
        |  FROM pr JOIN idx USING (cell)
        |  WHERE pr.q_id <> idx.c_id)""".stripMargin
 
   private[ops] def ivfCandSql: String = ivfCandSqlFrom(
-    s"SELECT * FROM read_parquet('${pth("ivf_idx")}/*.parquet')")
+    s"SELECT * FROM read_parquet('${oracleFrame("ivf_idx")}/*.parquet')")
 
   private def ivfTopK(s: SparkSession, dir: String): DataFrame =
     rankPairs(normed(s, dir), ivfCandidates(s, dir))
@@ -749,7 +723,7 @@ object SimilarityOps {
 
   private def ivfFilteredSql: String = rankPairsSql(
     s"""${ivfCandSqlFrom(
-        s"SELECT * FROM read_parquet('${pth("ivf_idx")}/*.parquet')",
+        s"SELECT * FROM read_parquet('${oracleFrame("ivf_idx")}/*.parquet')",
         "cand0")},
        |cand AS (
        |  SELECT cand0.q_id, cand0.c_id
@@ -773,17 +747,17 @@ object SimilarityOps {
   // [[graft.streaming.IvfMonitor]]).
   private def ivfDeltaTopK(s: SparkSession, dir: String): DataFrame = {
     val e = normed(s, dir)
-    val base = persistO(s, dir, "ivf_idx_base",
+    val base = ContentKey.persistForOracle(s, dir, "ivf_idx_base",
       indexAssign(s, dir, e.filter(col("vec_id") % 5 =!= 4)))
-    val delta = persistO(s, dir, "ivf_idx_delta",
+    val delta = ContentKey.persistForOracle(s, dir, "ivf_idx_delta",
       indexAssign(s, dir, e.filter(col("vec_id") % 5 === 4)))
     rankPairs(e, candidatesFrom(s, dir, base.unionByName(delta)))
   }
 
   private def ivfDeltaSql: String = rankPairsSql(ivfCandSqlFrom(
-    s"""SELECT * FROM read_parquet('${pth("ivf_idx_base")}/*.parquet')
+    s"""SELECT * FROM read_parquet('${oracleFrame("ivf_idx_base")}/*.parquet')
        |  UNION ALL
-       |  SELECT * FROM read_parquet('${pth("ivf_idx_delta")}/*.parquet')"""
+       |  SELECT * FROM read_parquet('${oracleFrame("ivf_idx_delta")}/*.parquet')"""
       .stripMargin))
 
   // ---- MMR: diversity-aware re-rank of the IVF shortlist ----
@@ -824,7 +798,7 @@ object SimilarityOps {
     // exact-cosine shortlist; persisted so the greedy rounds replay a tiny
     // frame instead of the candidate join (one embeddings pass, like every
     // IVF variant's rankPairs tail)
-    val rel = persistO(s, dir, "mmr_rel",
+    val rel = ContentKey.persistForOracle(s, dir, "mmr_rel",
       cand.join(broadcast(q), "q_id").join(c, "c_id")
         .select(col("q_id"), col("c_id"),
           (vdot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
@@ -842,7 +816,7 @@ object SimilarityOps {
       col("c_norm").as("a_norm"))
     val cb = c.select(col("c_id").as("b"), col("c_emb").as("b_emb"),
       col("c_norm").as("b_norm"))
-    val psimHalf = persistO(s, dir, "mmr_psim",
+    val psimHalf = ContentKey.persistForOracle(s, dir, "mmr_psim",
       rel.select(col("q_id"), col("c_id").as("a"))
         .join(rel.select(col("q_id"), col("c_id").as("b")), "q_id")
         .filter(col("a") < col("b"))
@@ -1202,7 +1176,7 @@ object SimilarityOps {
       book: Array[Double], dim: Int): Unit = {
     import s.implicits._
     val subDim = dim / PqM
-    persistO(s, dir, sub,
+    ContentKey.persistForOracle(s, dir, sub,
       (for (sb <- 0 until PqM; code <- 0 until PqKs) yield {
         val base = (sb * PqKs + code) * subDim
         (sb, code, book.slice(base, base + subDim).toSeq)
@@ -1224,7 +1198,7 @@ object SimilarityOps {
     persistBook(s, dir, "pq_book", book, dim)
     val e = normed(s, dir)
     // compressed index: (cell, c_id, codes) — no embedding column
-    val idx = persistO(s, dir, "pq_idx",
+    val idx = ContentKey.persistForOracle(s, dir, "pq_idx",
       e.select(col("vec_id").as("c_id"),
         gf.pq_encode(col("embedding"), bLit, lit(dim), lit(PqM), lit(PqKs))
           .as("codes"),
@@ -1247,9 +1221,9 @@ object SimilarityOps {
   }
 
   private def ivfPqSql: String = rankPairsSql(
-    s"""idx AS (SELECT * FROM read_parquet('${pth("pq_idx")}/*.parquet')),
-       |pr AS (SELECT * FROM read_parquet('${pth("ivf_probe")}/*.parquet')),
-       |book AS (SELECT * FROM read_parquet('${pth("pq_book")}/*.parquet')),
+    s"""idx AS (SELECT * FROM read_parquet('${oracleFrame("pq_idx")}/*.parquet')),
+       |pr AS (SELECT * FROM read_parquet('${oracleFrame("ivf_probe")}/*.parquet')),
+       |book AS (SELECT * FROM read_parquet('${oracleFrame("pq_book")}/*.parquet')),
        |cp AS (
        |  SELECT DISTINCT pr.q_id, idx.c_id, idx.codes
        |  FROM pr JOIN idx USING (cell) WHERE pr.q_id <> idx.c_id),
@@ -1396,14 +1370,14 @@ object SimilarityOps {
     // vdot(q, rcol_j) over this table
     locally {
       import s.implicits._
-      persistO(s, dir, "opq_rot",
+      ContentKey.persistForOracle(s, dir, "opq_rot",
         (0 until dim).map(j =>
             (j, (0 until dim).map(i => rot(i * dim + j))))
           .toDF("j", "rcol"))
     }
     val e = normed(s, dir)
     // cells on the RAW vectors (rotation is inside the codes only)
-    val idx = persistO(s, dir, "opq_idx",
+    val idx = ContentKey.persistForOracle(s, dir, "opq_idx",
       e.select(col("vec_id").as("c_id"),
         gf.pq_encode_rot(col("embedding"), rLit, bLit,
           lit(dim), lit(PqM), lit(PqKs)).as("codes"),
@@ -1424,10 +1398,10 @@ object SimilarityOps {
   }
 
   private def ivfOpqSql: String = rankPairsSql(
-    s"""idx AS (SELECT * FROM read_parquet('${pth("opq_idx")}/*.parquet')),
-       |pr AS (SELECT * FROM read_parquet('${pth("ivf_probe")}/*.parquet')),
-       |book AS (SELECT * FROM read_parquet('${pth("opq_book")}/*.parquet')),
-       |rot AS (SELECT * FROM read_parquet('${pth("opq_rot")}/*.parquet')),
+    s"""idx AS (SELECT * FROM read_parquet('${oracleFrame("opq_idx")}/*.parquet')),
+       |pr AS (SELECT * FROM read_parquet('${oracleFrame("ivf_probe")}/*.parquet')),
+       |book AS (SELECT * FROM read_parquet('${oracleFrame("opq_book")}/*.parquet')),
+       |rot AS (SELECT * FROM read_parquet('${oracleFrame("opq_rot")}/*.parquet')),
        |zq AS (
        |  SELECT qe.vec_id AS q_id,
        |    list(${vdotSql("qe.embedding", "r.rcol")} ORDER BY r.j) AS z
@@ -1477,14 +1451,14 @@ object SimilarityOps {
     // the coarse centroids anchor each reconstruction — persist as rows
     locally {
       import s.implicits._
-      persistO(s, dir, "rq_cmat",
+      ContentKey.persistForOracle(s, dir, "rq_cmat",
         (0 until cmat.length / dim).map(c =>
             (c, cmat.slice(c * dim, c * dim + dim).toSeq))
           .toDF("cell", "cent"))
     }
     val e = normed(s, dir)
     // compressed index: (cell, c_id, codes-under-that-cell)
-    val idx = persistO(s, dir, "rq_idx",
+    val idx = ContentKey.persistForOracle(s, dir, "rq_idx",
       e.select(col("vec_id").as("c_id"), col("embedding"),
           explode(gf.ivf_cells(col("embedding"), cLit, lit(dim), lit(assign)))
             .as("cell"))
@@ -1509,10 +1483,10 @@ object SimilarityOps {
   }
 
   private def ivfRqSql: String = rankPairsSql(
-    s"""idx AS (SELECT * FROM read_parquet('${pth("rq_idx")}/*.parquet')),
-       |pr AS (SELECT * FROM read_parquet('${pth("ivf_probe")}/*.parquet')),
-       |book AS (SELECT * FROM read_parquet('${pth("rq_book")}/*.parquet')),
-       |cm AS (SELECT * FROM read_parquet('${pth("rq_cmat")}/*.parquet')),
+    s"""idx AS (SELECT * FROM read_parquet('${oracleFrame("rq_idx")}/*.parquet')),
+       |pr AS (SELECT * FROM read_parquet('${oracleFrame("ivf_probe")}/*.parquet')),
+       |book AS (SELECT * FROM read_parquet('${oracleFrame("rq_book")}/*.parquet')),
+       |cm AS (SELECT * FROM read_parquet('${oracleFrame("rq_cmat")}/*.parquet')),
        |res AS (
        |  SELECT i.c_id, i.cell, flatten(list(b.subvec ORDER BY b.sub)) AS resv
        |  FROM idx i JOIN book b ON b.code = i.codes[b.sub + 1]
@@ -1635,11 +1609,11 @@ object SimilarityOps {
       exclude: Column, k: Int): DataFrame = {
     val model = fitMiningModel(s, dir)
     val emb = t(s, dir, "embeddings")
-    val idx = persistO(s, dir, "hn_idx",
+    val idx = ContentKey.persistForOracle(s, dir, "hn_idx",
       emb.select(col("vec_id").as("c_id"), col("label").as("c_label"),
         explode(miningCells(s, model, col("embedding"), MineAssign))
           .as("cell")))
-    val pr = persistO(s, dir, "hn_probe",
+    val pr = ContentKey.persistForOracle(s, dir, "hn_probe",
       emb.select(col("vec_id").as("a_id"), col("label").as("a_label"),
         explode(miningCells(s, model, col("embedding"), MineProbe))
           .as("cell")))
@@ -1700,8 +1674,8 @@ object SimilarityOps {
     * predicate mirrors the Spark variation point. */
   private def minedCtes(excludePred: String): String =
     s"""n AS MATERIALIZED ($normedSql),
-       |idx AS (SELECT * FROM read_parquet('${pth("hn_idx")}/*.parquet')),
-       |pr AS (SELECT * FROM read_parquet('${pth("hn_probe")}/*.parquet')),
+       |idx AS (SELECT * FROM read_parquet('${oracleFrame("hn_idx")}/*.parquet')),
+       |pr AS (SELECT * FROM read_parquet('${oracleFrame("hn_probe")}/*.parquet')),
        |cand AS (
        |  SELECT DISTINCT pr.a_id, idx.c_id
        |  FROM pr JOIN idx USING (cell)
@@ -1768,7 +1742,7 @@ object SimilarityOps {
           col("cos_sim"), col("rank"))
         .localCheckpoint()
     }
-    reRegisterO(dir, "hn_idx", "hn_probe") // mirrors read these on hit too
+    ContentKey.pointOracleFrames(dir, Seq("hn_idx", "hn_probe")) // read on hit too
     core
   }
 
@@ -1869,7 +1843,7 @@ object SimilarityOps {
     }
     // a compCache hit skips knnCore entirely — the components mirrors
     // still read the mined frames, so re-point the registry here too
-    reRegisterO(dir, "hn_idx", "hn_probe")
+    ContentKey.pointOracleFrames(dir, Seq("hn_idx", "hn_probe"))
     comp
   }
 
@@ -2112,7 +2086,8 @@ object SimilarityOps {
         (p, ev(ei), scaled.toSeq, b)
       }
     import s.implicits._
-    persistO(s, dir, "pca_model", rows.toDF("comp", "lambda", "w", "b"))
+    ContentKey.persistForOracle(s, dir, "pca_model",
+      rows.toDF("comp", "lambda", "w", "b"))
   }
 
   private def embedPca(s: SparkSession, dir: String): DataFrame = {
@@ -2126,7 +2101,7 @@ object SimilarityOps {
   }
 
   private def embedPcaSql: String =
-    s"""WITH m AS (SELECT * FROM read_parquet('${pth("pca_model")}/*.parquet'))
+    s"""WITH m AS (SELECT * FROM read_parquet('${oracleFrame("pca_model")}/*.parquet'))
        |SELECT e.vec_id, m.comp,
        |  round(${vdotSql("e.embedding", "m.w")} - m.b, 6) AS value
        |FROM embeddings e, m
@@ -2151,9 +2126,9 @@ object SimilarityOps {
       subs: Seq[String])(compute: => DataFrame): DataFrame = {
     val df = legCache.get(
       s"${ContentKey.ofScoped(s, Seq(dir))}/$leg")(compute)
-    // a HIT skips the compute path's persistO calls; the mirrors still
+    // a HIT skips the compute path's persist calls; the mirrors still
     // read the persisted frames, so re-point the registry on every get
-    reRegisterO(dir, subs: _*)
+    ContentKey.pointOracleFrames(dir, subs)
     df
   }
 

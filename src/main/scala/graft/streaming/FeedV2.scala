@@ -31,7 +31,8 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   *  - `commit(end)` prunes WAL entries below the committed offset, so
   *    the dir holds only the uncommitted horizon (bounded by trigger
   *    backlog, not stream lifetime);
-  *  - a FAILED poll simply does not advance the offset: the trigger
+  *  - a FAILED poll simply does not advance the offset (before the
+  *    first durable payload there is no offset at all): the trigger
   *    finds no new data and the next one retries — no data loss,
   *    no spurious failure of the whole query on one network blip. With
   *    `dlqPath` set, each failed poll also leaves one dead-letter record
@@ -165,7 +166,10 @@ object FeedV2 {
             writeAtomic(dir, f"$next%020d" + s"_${ms}_${java.util.UUID.randomUUID()}.json",
               compact(render(rec)).getBytes("UTF-8"))
           }
-          FeedOffset(next)
+          // no offset at all before the first durable payload: Spark reads
+          // null as "no new data", where FeedOffset(0) would run a fresh
+          // query's batch 0 over an empty range
+          if (next == 0L) null else FeedOffset(next)
       }
     }
 

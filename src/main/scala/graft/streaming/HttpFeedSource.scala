@@ -45,10 +45,12 @@ object HttpFeedSource {
     * poll happens inside the [[FeedV2]] DataSourceV2 source (one GET per
     * trigger, payload WAL-persisted under the checkpoint before the offset
     * advances), so a replayed batch re-processes the SAME fetched bytes
-    * instead of re-polling — genuine exactly-once from poll to parquet.
-    * The sink side keeps the foreachBatch shape so the lake stays a plain
-    * hive tree with no sink log (`_spark_metadata`), written and read like
-    * the batch lake; the SOURCE is where replayability lives.
+    * instead of re-polling. The sink side keeps the foreachBatch shape so
+    * the lake stays a plain hive tree with no sink log (`_spark_metadata`),
+    * written and read like the batch lake — and foreachBatch is
+    * at-least-once: a crash between a batch's append and its `commits/N`
+    * entry replays the batch and appends its rows a second time. Polled
+    * bytes are never lost or substituted; lake rows may be duplicated.
     *
     * A failed poll advances no offset and the next trigger retries. With
     * `dlqPath` set, each failure also appends one (poll_id, ts, url, error)
@@ -65,8 +67,7 @@ object HttpFeedSource {
     }
     dlqPath.foreach(reader.option("dlqPath", _))
     // the offset advances only past a durable payload, so every batch
-    // holds a feed except a fresh query's first after a failed first
-    // poll, whose append writes no rows: no emptiness check (a job) needed
+    // holds a feed: no emptiness check (a job) needed
     val onBatch: (Dataset[Row], Long) => Unit = (batch, _) =>
       IngestOps.writeHive(IngestOps.enrich(
         IngestOps.decodeProtobuf(batch.select("feed")), timezone), outPath)

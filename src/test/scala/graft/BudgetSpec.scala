@@ -54,8 +54,9 @@ class BudgetSpec extends SparkSpec {
     Files.write(f.toPath, ("trip_id,stop_id,stop_sequence,arrival_time\n" +
       "T1,00042,1,08:00:00\nT1,10280,2,08:10:00\n").getBytes("UTF-8"))
     val read = jobs(graft.ops.Gtfs.readGtfsCsv(spark, f.getPath))
-    // the header line, and no schema-inference scan
-    assert(read == 1, s"readGtfsCsv ran $read jobs")
+    // the header comes from the first line on the driver, and there is
+    // no schema-inference scan
+    assert(read == 0, s"readGtfsCsv ran $read jobs")
   }
 
   test("job budget: one poll trigger") {

@@ -145,19 +145,36 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     (0L until 50L).map(i => (i, s"t$i")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val ref = new java.util.concurrent.atomic.AtomicReference[String]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
       val tasks = (0 until 4).map { _ =>
         pool.submit(new java.util.concurrent.Callable[Long] {
           def call(): Long = graft.ops.ContentKey.persistForOracle(
-            spark, dir, "race_frame", ref,
+            spark, dir, "race_frame",
             spark.read.parquet(s"$dir/documents.parquet")).count()
         })
       }
       tasks.foreach(t =>
         assert(t.get(120, java.util.concurrent.TimeUnit.SECONDS) == 50L))
     } finally pool.shutdownNow()
+  }
+
+  test("a cached query's oracle mirror names the frame of the dir it last served") {
+    // dir A, then a copy B, then A again through the pair cache: the hit
+    // skips the persist call, and the mirror must still read A's frame
+    val a = fixtureDir
+    val b = Files.createTempDirectory("graft-dedup-copy").toString
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$a/documents.parquet"), new java.io.File(s"$b/documents.parquet"))
+    def frame(d: String) = s"/graft_oracle/${graft.ops.ContentKey.md5(d)}/simhash/"
+    def run(d: String) = SparkEntry.queries("dedup_simhash")(spark, d).collect().toSeq
+    def mirror = SparkEntry.oracleSql("dedup_simhash")
+    val rowsA = run(a)
+    assert(mirror.contains(frame(a)), mirror)
+    assert(run(b) == rowsA)
+    assert(mirror.contains(frame(b)), mirror)
+    assert(run(a) == rowsA)
+    assert(mirror.contains(frame(a)) && !mirror.contains(frame(b)), mirror)
   }
 
   test("dedup_ngram_jaccard finds the near-duplicates with high scores") {

@@ -378,6 +378,32 @@ class PlanSpec extends SparkSpec {
       "join over a partially-deleted bucket dir lost rows instead of rebuilding")
   }
 
+  test("a derived dir missing a manifest-listed file is rebuilt; an intact one is adopted") {
+    // the builder behind the geo and day lakes: a dir that passes the
+    // manifest check is served as it is on disk, one that lost a part file
+    // (a tmp cleaner that left _SUCCESS) is written again
+    val src = java.nio.file.Files.createTempDirectory("graft-derived-src").toString
+    spark.range(0, 100, 1, 2).write.parquet(s"$src/events.parquet")
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    def build(): String = graft.ops.ContentKey.derivedDir(spark, "derivedspec", src,
+        Seq(s"$src/events.parquet")) { root =>
+      writes.incrementAndGet()
+      spark.read.parquet(s"$src/events.parquet").write.mode("overwrite").parquet(root)
+    }
+    def parts(root: String): Map[String, Long] =
+      new java.io.File(root).listFiles().filter(_.getName.startsWith("part-"))
+        .map(f => f.getName -> f.lastModified()).toMap
+    val root = build()
+    val before = parts(root)
+    assert(writes.get == 1 && before.size == 2)
+    assert(build() == root)
+    assert(writes.get == 1 && parts(root) == before, "an intact dir was rewritten")
+    assert(new java.io.File(root, before.keys.min).delete())
+    assert(build() == root)
+    assert(writes.get == 2, "a dir missing a part file was adopted")
+    assert(spark.read.parquet(root).count() == 100)
+  }
+
   test("naive st_dwithin join is rewritten to a geohash equi-join by the rule") {
     val p = plan("spatial_join_auto")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -87,24 +87,37 @@ class StreamingSpec extends SparkSpec {
         apiKey = Some("x-api-key" -> "sekret"),
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
       try {
-        // wait for a fully-landed poll: a committed part file carrying
-        // the geo footer (the write gives each file its footer, so a
-        // committed file with geo means that batch's write finished)
-        def stamped(): Boolean =
+        // 180 s: generous because this test shares the JVM with the rest
+        // of the suite — under full-suite load (GC + codegen of a
+        // 127-query catalog) the first trigger's planning alone has been
+        // observed to eat most of a 60 s budget; in isolation it finishes
+        // in seconds, so the slack never slows a green run.
+        // Wait for a fully-landed batch, not a whole-directory Spark read:
+        // under full-suite load a list-then-read spans multiple triggers,
+        // each adding files. A committed part file (not _temporary
+        // staging) carrying the geo footer means a batch's write finished
+        // (the write gives each file its footer), so stop() cannot kill an
+        // in-flight batch before any data is durable. Row-level
+        // assertions happen post-stop on the settled directory.
+        def landed(): Boolean =
           parquetFiles(new java.io.File(out)).exists(f =>
             scala.util.Try(
               graft.ops.GeoParquetMeta.keyValueMeta(spark, f.toString))
               .getOrElse(Map.empty).contains("geo")) // file may be mid-write
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (!stamped() && System.nanoTime() < deadline) Thread.sleep(200)
-        assert(stamped(), "poller produced no geo-stamped parquet within 60s")
+        val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
+        while (!landed() && System.nanoTime() < deadline) Thread.sleep(200)
+        assert(landed(), "poller landed no geo-stamped parquet within 180s")
       } finally q.stop()
 
       assert(hits.get() >= 2) // the direct fetch + at least one poll
       assert(seenKey.get() == "sekret", "the source's poll did not send the api key")
-      val back = spark.read.parquet(out)
-      assert(back.count() >= 1)
-      val r = back.filter(col("trip_id") === "T77").collect().head
+      // post-stop the directory is settled; one retry covers a commit
+      // that landed exactly at stop time
+      val r = (1 to 3).iterator
+        .map(_ => scala.util.Try(
+          spark.read.parquet(out).filter(col("trip_id") === "T77").collect()))
+        .collectFirst { case scala.util.Success(rs) if rs.nonEmpty => rs.head }
+        .getOrElse(fail("no T77 row readable after query stop"))
       assert(r.getAs[String]("vehicle_id") == "V123")
       assert(r.getAs[String]("geohash").length == 7)
       assert(r.getAs[Int]("year") == 2024 && r.getAs[Int]("month") == 3)
@@ -139,18 +152,25 @@ class StreamingSpec extends SparkSpec {
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"),
       dlqPath = Some(dlq))
     try {
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      // two records: triggers run one at a time, so the first trigger —
+      // and any batch it started — has finished when the second polls
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
       def dlqRecords(): Long =
         scala.util.Try(spark.read.json(dlq).filter(col("url") === url).count())
           .getOrElse(0L)
-      while (dlqRecords() == 0 && System.nanoTime() < deadline) Thread.sleep(200)
-      assert(dlqRecords() >= 1, "no DLQ record within 30s")
+      while (dlqRecords() < 2 && System.nanoTime() < deadline) Thread.sleep(200)
+      assert(dlqRecords() >= 2, "fewer than two DLQ records within 60s")
       assert(q.isActive, "stream died despite DLQ mode")
       val rec = spark.read.json(dlq).collect().head
       assert(rec.getAs[String]("url") == url)
       // a refused connection has no message: the record names the class
       val error = rec.getAs[String]("error")
       assert(error.contains("ConnectException") && error != "null", error)
+      // a poll that never succeeded yields no offset, so no batch ran:
+      // nothing committed, nothing appended (not even a _SUCCESS)
+      assert(!new java.io.File(ckpt, "commits/0").exists(), "an empty batch committed")
+      assert(new java.io.File(out).list().isEmpty,
+        s"an empty batch wrote ${new java.io.File(out).list().mkString(", ")}")
     } finally q.stop()
 
     def source(dir: java.io.File, dlqPath: Option[String]) = new FeedV2.FeedStream(
@@ -160,12 +180,12 @@ class StreamingSpec extends SparkSpec {
     val dlq2 = Files.createTempDirectory("graft-dlq2").toFile
     val withDlq = source(Files.createTempDirectory("graft-http-ckpt2").toFile,
       Some(dlq2.toString))
-    assert(withDlq.latestOffset().json() == "0" && withDlq.latestOffset().json() == "0")
+    assert(withDlq.latestOffset() == null && withDlq.latestOffset() == null)
     val polls = spark.read.json(dlq2.toString).select("poll_id").collect().map(_.getLong(0))
     assert(polls.toSeq == Seq(0L, 0L), s"expected one record per failed poll, got $polls")
     // without dlqPath a failed poll writes nothing: no DLQ dir, no payload
     val bare = Files.createTempDirectory("graft-http-ckpt3").toFile
-    assert(source(bare, None).latestOffset().json() == "0")
+    assert(source(bare, None).latestOffset() == null)
     assert(bare.list().isEmpty, s"failed poll wrote ${bare.list().mkString(", ")}")
   }
 
@@ -232,61 +252,6 @@ class StreamingSpec extends SparkSpec {
       }
       assert(nonLocal.getMessage.contains("hdfs://nn:8020/ckpt"))
     } finally scala.util.Try(server.stop(0))
-  }
-
-  test("V2 poll query: offset-tracked source end-to-end to enriched parquet") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    import graft.streaming.HttpFeedSource
-    val feed = TestProto.singleVehicleFeed(1709650000L) // 2024-03-05 UTC
-    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/positions", new HttpHandler {
-      override def handle(x: HttpExchange): Unit = {
-        x.sendResponseHeaders(200, feed.length)
-        try x.getResponseBody.write(feed) finally x.close()
-      }
-    })
-    server.start()
-    val url = s"http://127.0.0.1:${server.getAddress.getPort}/positions"
-    val out = Files.createTempDirectory("graft-v2-out").toString
-    val ckpt = Files.createTempDirectory("graft-v2-e2e-ckpt").toString
-    try {
-      val q = HttpFeedSource.pollQueryV2(spark, url, out, ckpt,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      try {
-        // 180 s: generous because this test shares the JVM with the rest
-        // of the suite — under full-suite load (GC + codegen of a
-        // 127-query catalog) the first trigger's planning alone has been
-        // observed to eat most of a 60 s budget; in isolation it finishes
-        // in seconds, so the slack never slows a green run
-        val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-        // poll for a fully-landed batch (the HTTP-poller test's stamped()
-        // pattern), not a whole-directory Spark read: under full-suite
-        // load a list-then-read spans multiple triggers, each adding
-        // files, and a full-suite run once burned the whole 180 s that
-        // way while files demonstrably existed. A committed part file
-        // (not _temporary staging) carrying the geo footer means a
-        // batch's write finished, so stop() cannot kill an in-flight
-        // batch before any data is durable. Row-level assertions happen
-        // post-stop on the settled directory.
-        def landed(): Boolean =
-          parquetFiles(new java.io.File(out)).exists(f =>
-            scala.util.Try(
-              graft.ops.GeoParquetMeta.keyValueMeta(spark, f.toString))
-              .getOrElse(Map.empty).contains("geo"))
-        while (!landed() && System.nanoTime() < deadline) Thread.sleep(200)
-        assert(landed(), "V2 poll landed no stamped parquet within 180s")
-      } finally q.stop()
-      // post-stop the directory is settled; one retry covers a commit
-      // that landed exactly at stop time
-      val r = (1 to 3).iterator
-        .map(_ => scala.util.Try(
-          spark.read.parquet(out).filter(col("trip_id") === "T77").collect()))
-        .collectFirst { case scala.util.Success(rs) if rs.nonEmpty => rs.head }
-        .getOrElse(fail("no T77 row readable after query stop"))
-      assert(r.getAs[String]("vehicle_id") == "V123")
-      assert(r.getAs[String]("geohash").length == 7)
-      assert(r.getAs[Int]("year") == 2024 && r.getAs[Int]("month") == 3)
-    } finally server.stop(0)
   }
 
   test("mapGroupsWithState accumulates per-vehicle totals across micro-batches") {

@@ -2,21 +2,23 @@ package graft.ops
 
 import java.util.concurrent.{ExecutionException, Executors}
 import scala.util.{Failure, Try}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** The reference's compaction plane (compaction/runtime/handler.py): rewrite
-  * a day's (or month's) many small snappy files into few large zstd-15
-  * files with tuned row groups (:104-127) — in Spark, a ~20-line batch job:
-  * schema-pinned scan → coalesce → sort-within-partitions → GeoParquet
-  * write with codec + block-size options, each output file's `geo` footer
-  * written by that same write ([[GeoParquetMeta.Format]]).
+  * a day's (or month's) many small snappy files into one large zstd-15
+  * file with tuned row groups (:104-127) — in Spark, a ~20-line batch job:
+  * schema-pinned scan → `coalesce(1)` → z-order sort within the partition
+  * (geo tables only) → GeoParquet write with codec + block-size options,
+  * the file's `geo` footer written by that same write
+  * ([[GeoParquetMeta.Format]]).
   *
   * At 100 TB this is the small-file fix that keeps scan parallelism sane:
-  * target row groups of 61,440–122,880 rows (the reference's tuning, from
-  * the DuckDB perf guide) so readers get locality, and one output file per
-  * `targetFiles` so the file index stays small.
+  * row groups of 61,440–122,880 rows (the reference's tuning, from the
+  * DuckDB perf guide) so readers get locality, and one output file per
+  * partition so the file index stays small. A window's partitions are
+  * compacted concurrently ([[compactWindow]]), one task each.
   */
 object CompactOps {
 
@@ -58,23 +60,14 @@ object CompactOps {
   /** Z-order key over the GeoParquet bbox corner: quantize lon/lat onto a
     * 2^ZBits grid and Morton-interleave. Uses the covering struct the
     * enrich step already wrote, so it works on any geo table. */
-  private def geoCurveKey(curve: String): org.apache.spark.sql.Column = {
+  private[graft] def zKey: org.apache.spark.sql.Column = {
     def q(c: org.apache.spark.sql.Column, lo: Double, hi: Double) =
       least(greatest(
         floor((c - lit(lo)) / lit(hi - lo) * lit((1 << ZBits) - 1)), lit(0.0)),
         lit(((1 << ZBits) - 1).toDouble)).cast("int")
-    val (x, y) = (q(col("bbox.xmin"), -180.0, 180.0),
-      q(col("bbox.ymin"), -90.0, 90.0))
-    curve match {
-      // the jump-free curve: tighter per-file/per-row-group bboxes than
-      // Morton (layout_prune_stats quantifies the gap at query time)
-      case "hilbert" => graft.expr.functions.hilbert(x, y, lit(ZBits))
-      case "zorder"  => graft.expr.functions.zorder(x, y, lit(ZBits))
-      case other => throw new IllegalArgumentException(
-        s"unknown geo curve '$other' (zorder|hilbert)")
-    }
+    graft.expr.functions.zorder(q(col("bbox.xmin"), -180.0, 180.0),
+      q(col("bbox.ymin"), -90.0, 90.0), lit(ZBits))
   }
-
 
   /** `inPath`'s data schema from one data file's footer, read on the
     * driver: the file Spark's non-merging inference would read, without
@@ -102,42 +95,27 @@ object CompactOps {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
-  /** Compact `inPath` into `targetFiles` zstd files. Geo tables (those
-    * carrying the `bbox` covering struct) default to a z-ordered layout:
-    * range-partition the rewrite by the Morton key of the bbox corner and
-    * sort within each output file, so every file — and every row group
-    * inside it — covers a tight lat×lon cell and the bbox footer stats
-    * prune 2-D scans hard (CorpusSpec measures ~13× tighter footprints;
-    * IngestCompactSpec measures it on this exact path). The range
-    * repartition is a shuffle, but compaction rewrites every byte anyway
-    * and this is the rewrite order you want at 100 TB. Explicit
-    * `sortCols` (or `zorderGeo=false`) opts out. */
-  def compact(spark: SparkSession, inPath: String, outPath: String,
-      targetFiles: Int = 1, sortCols: Seq[String] = Nil,
-      zorderGeo: Boolean = true, geoCurve: String = "zorder"): Unit = {
-    // validate eagerly: a typo'd curve must fail on EVERY invocation, not
-    // only when the geo layout branch happens to engage
-    require(Set("zorder", "hilbert")(geoCurve),
-      s"unknown geo curve '$geoCurve' (zorder|hilbert)")
+  /** Compact `inPath` into one zstd file at `outPath`. A geo table (one
+    * carrying the `bbox` covering struct) is written in z-order of its
+    * bbox corner, so each row group covers a tight lat×lon cell and its
+    * footer stats prune 2-D scans; any other table is written in scan
+    * order. The scan, the sort and the write run in one task: a day is
+    * one output file, and a shuffle would only move it to one reducer. */
+  def compact(spark: SparkSession, inPath: String, outPath: String): Unit = {
     val df = spark.read.schema(footerSchema(spark, inPath)).parquet(inPath)
-    // the z path reads bbox.xmin/ymin — engage it only when they exist
-    // and are numeric, so an unrelated table that happens to carry a
-    // `bbox` struct of its own still compacts instead of failing
+    // the z key reads bbox.xmin/ymin — use it only when they exist and
+    // are numeric, so an unrelated table that happens to carry a `bbox`
+    // struct of its own still compacts instead of failing
     val isGeo = df.schema.fields.exists(f => f.name == "bbox" &&
       (f.dataType match {
-        case st: org.apache.spark.sql.types.StructType =>
+        case st: StructType =>
           Seq("xmin", "ymin").forall(n => st.fields.exists(sf =>
             sf.name == n &&
               sf.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
         case _ => false
       }))
-    val arranged =
-      if (sortCols.nonEmpty)
-        df.coalesce(targetFiles).sortWithinPartitions(sortCols.map(col): _*)
-      else if (zorderGeo && isGeo) {
-        val k = geoCurveKey(geoCurve)
-        df.repartitionByRange(targetFiles, k).sortWithinPartitions(k)
-      } else df.coalesce(targetFiles)
+    val one = df.coalesce(1)
+    val arranged = if (isGeo) one.sortWithinPartitions(zKey) else one
     // the geo format writes the GeoParquet footer on each output file like
     // the reference (compaction/runtime/handler.py:86-95); a table without
     // the geometry column gets plain parquet
@@ -194,8 +172,7 @@ object CompactOps {
   def compactWindow(spark: SparkSession, inRoot: String, outRoot: String,
       previousDays: Option[Int] = None, previousMonths: Option[Int] = None,
       timezone: String = "UTC", compactToNow: Boolean = false,
-      now: java.time.Instant = java.time.Instant.now(),
-      targetFiles: Int = 1, sortCols: Seq[String] = Nil): Seq[(String, String)] = {
+      now: java.time.Instant = java.time.Instant.now()): Seq[(String, String)] = {
     val (duration, period) = (previousDays, previousMonths) match {
       case (Some(d), None) => (d, "days")
       case (None, Some(m)) => (m, "months")
@@ -218,7 +195,7 @@ object CompactOps {
         math.min(pairs.size, spark.sparkContext.defaultParallelism))
       try {
         val runs = pairs.map { case (in, out) =>
-          pool.submit[Unit](() => compact(spark, in, out, targetFiles, sortCols))
+          pool.submit[Unit](() => compact(spark, in, out))
         }
         // every run ends before any outcome is looked at
         val outcomes = runs.map(r => Try(r.get()))

@@ -141,9 +141,9 @@ object CorpusOps {
   // tail arithmetic runs on that literal frame in-engine, so the
   // fixed-point ln stays the engines' own. Like the other bounded fits
   // (kmFit, pcaModel, bpeFit) the collected scan runs at build time and
-  // sits OUTSIDE the recorded plan — PLANS.md shows the tail over a
-  // LocalTableScan; the scan's own shape is the plain sample_split
-  // aggregate documented there.
+  // sits OUTSIDE the query's plan — `graft.ExplainMain` prints the tail
+  // over a LocalTableScan; the scan's own shape is the plain sample_split
+  // aggregate.
   private def splitDrift(s: SparkSession, dir: String): DataFrame = {
     val strataRows = t(s, dir, "documents")
       .select(col("source"), col("lang"),

@@ -27,10 +27,8 @@ import scala.util.Try
   * Here too the footer is written by the write itself: every geo write
   * goes through [[Format]], Spark's parquet format whose write support
   * folds each file's bbox while writing rows and adds `geo` to the footer
-  * when the file closes. A file therefore never changes after its commit,
-  * which keeps a streaming file sink's `_spark_metadata` log (the
-  * exactly-once record, with each file's size) true as written. This
-  * object keeps the JSON codec and the footer readers.
+  * when the file closes. A file therefore never changes after its commit.
+  * This object keeps the JSON codec and the footer readers.
   */
 object GeoParquetMeta {
 
@@ -126,8 +124,8 @@ object GeoParquetMeta {
 
 /** Spark's parquet file format with the GeoParquet `geo` footer: the only
   * change is the write support each output file is written with. Used by
-  * name through [[GeoParquetMeta.Format]] on batch writers and streaming
-  * file sinks alike. */
+  * name through [[GeoParquetMeta.Format]] by the hot-zone append
+  * (`IngestOps.writeHive`) and by compaction. */
 class GeoParquetFormat extends ParquetFileFormat {
   override def prepareWrite(sparkSession: SparkSession, job: Job,
       options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {

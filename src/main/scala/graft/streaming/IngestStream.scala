@@ -1,21 +1,22 @@
 package graft.streaming
 
-import graft.ops.{GeoParquetMeta, IngestOps}
+import graft.ops.IngestOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-/** The reference's ingest loop (EventBridge rate → Lambda poll → parquet
-  * put, etl/infrastructure/construct.py:202-221) re-expressed as Structured
-  * Streaming: source → decode → enrich → partitioned parquet sink with a
-  * processing-time trigger. A file source over an events-shaped directory
-  * stands in for the Kafka/Kinesis feed (BASELINE.json north star); the
-  * transform body is the exact same `decode ∘ enrich` used in batch.
+/** Structured Streaming over the ingest transform: a file source over an
+  * events-shaped directory stands in for the Kafka/Kinesis feed
+  * (BASELINE.json north star), the transform body is the exact same
+  * `decode ∘ enrich` used in batch, and the live aggregates, state, dedup
+  * and joins below run on its output.
   *
-  * Where the reference has at-most-once + DLQ semantics (retry_attempts=0,
-  * construct.py:186-208), the checkpointed parquet sink upgrades this to
-  * exactly-once.
+  * The lake's hot zone is not written from here: its one writer is
+  * `IngestOps.writeHive`, driven per poll by
+  * [[HttpFeedSource.pollQueryV2]] — the reference's ingest loop
+  * (EventBridge rate → Lambda poll → parquet put,
+  * etl/infrastructure/construct.py:202-221).
   */
 object IngestStream {
 
@@ -26,21 +27,6 @@ object IngestStream {
   /** The full ingest transform on a streaming frame. */
   def transform(feed: DataFrame): DataFrame =
     IngestOps.enrich(IngestOps.decode(feed))
-
-  /** Hive-partitioned exactly-once sink (B1/B2): snappy GeoParquet under
-    * year=/month=/day=, checkpointed. Each file carries its `geo` footer
-    * when the sink log commits it, so the log's recorded sizes stay true.
-    * `trigger` models the reference's `schedule_seconds` (G1/G2 —
-    * sub-minute rates are native here, no Step Functions loop needed). */
-  def writer(enriched: DataFrame, outPath: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds")): DataStreamWriter[org.apache.spark.sql.Row] =
-    enriched.writeStream
-      .format(GeoParquetMeta.Format)
-      .partitionBy("year", "month", "day")
-      .option("compression", "snappy")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
 
   /** G5 extension: event-time windowed live aggregate with a watermark —
     * per-route vehicle counts and mean speed over tumbling 5-minute

@@ -42,10 +42,10 @@ class BudgetSpec extends SparkSpec {
 
     val cold = Files.createTempDirectory("graft-budget-cold").toString
     val compact = jobs(CompactOps.compact(spark, day, cold))
-    // the range shuffle's map stage and the write (a one-partition
-    // RangePartitioner takes no sample); the input schema comes from a
-    // footer read on the driver, not an inference job
-    assert(compact == 2, s"compact ran $compact jobs")
+    // the write, whose one task also scans and z-sorts the day (no
+    // shuffle); the input schema comes from a footer read on the driver,
+    // not an inference job
+    assert(compact == 1, s"compact ran $compact jobs")
   }
 
   test("job budget: one GTFS CSV read") {

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import graft.ops.{CompactOps, GeoParquetMeta, IngestOps}
-import graft.streaming.IngestStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,7 +33,7 @@ class GeoFooterSpec extends SparkSpec {
     assert(info.get._3.contains(data), s"footer ${info.get._3} vs data $data in $file")
   }
 
-  test("footer bbox matches each file's data: writeHive, compactWindow, streaming sink") {
+  test("footer bbox matches each file's data: writeHive, compactWindow") {
     val hot = Files.createTempDirectory("graft-geofoot-hot").toString
     IngestOps.writeHive(enriched.repartition(3), hot)
     val hotFiles = parquetUnder(hot)
@@ -53,19 +52,6 @@ class GeoFooterSpec extends SparkSpec {
     val coldFiles = parquetUnder(done.head._2)
     assert(coldFiles.nonEmpty)
     coldFiles.foreach(assertFooterMatchesData)
-
-    val feedDir = Files.createTempDirectory("graft-geofoot-feed").toString
-    Tables(spark, sf0001, "events").write.parquet(s"$feedDir/batch1")
-    val batch = spark.read.parquet(s"$feedDir/batch1")
-    val out = Files.createTempDirectory("graft-geofoot-sink").toString
-    val ckpt = Files.createTempDirectory("graft-geofoot-ckpt").toString
-    IngestStream.writer(
-      IngestStream.transform(IngestStream.readFeed(spark, batch.schema, s"$feedDir/*")),
-      out, ckpt, org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start().awaitTermination()
-    val sinkFiles = spark.read.parquet(out).inputFiles.toSeq
-    assert(sinkFiles.nonEmpty)
-    sinkFiles.foreach(assertFooterMatchesData)
   }
 
   test("the format writes no geo key without a geometry column, and no covering without bbox") {

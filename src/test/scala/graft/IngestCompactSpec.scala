@@ -36,8 +36,7 @@ class IngestCompactSpec extends SparkSpec {
     assert(partDirs.nonEmpty && partDirs.forall(_.getName.startsWith("year=")))
 
     val n = enriched.count()
-    CompactOps.compact(spark, hot, cold, targetFiles = 1,
-      sortCols = Seq("trip_id", "event_ts"))
+    CompactOps.compact(spark, hot, cold)
     val files = new java.io.File(cold).listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(files.length == 1, s"expected 1 compacted file, got ${files.length}")
@@ -91,7 +90,7 @@ class IngestCompactSpec extends SparkSpec {
     assert(spark.read.parquet(hot).count() == enriched.count())
 
     // compaction writes the geo footer on its outputs
-    CompactOps.compact(spark, hot, cold, targetFiles = 1)
+    CompactOps.compact(spark, hot, cold)
     geoOf(cold)
 
     // read side: geoInfo parses version / primary column / bbox back out
@@ -119,69 +118,29 @@ class IngestCompactSpec extends SparkSpec {
     assert(Tables.readGeo(spark, plainDir)._2.isEmpty)
   }
 
-  test("geo compaction defaults to a z-ordered layout with tighter per-file bboxes") {
-    // the geo lake carries the bbox covering struct, so compact() should
-    // range-partition the rewrite by the Morton key of the bbox corner —
-    // each output file then covers a tight lat×lon cell and its footer
-    // bbox stats prune 2-D scans. Compare against the same compaction
-    // with the z layout disabled, measuring real footers.
-    val in = Files.createTempDirectory("graft-zgeo-in").toString
-    val zOut = Files.createTempDirectory("graft-zgeo-z").toString
-    val hOut = Files.createTempDirectory("graft-zgeo-h").toString
-    enriched.write.mode("overwrite").parquet(in)
-    CompactOps.compact(spark, in, zOut, targetFiles = 6)
-    CompactOps.compact(spark, in, hOut, targetFiles = 6, zorderGeo = false)
-
-    def meanFileArea(dir: String): Double = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val conf = spark.sparkContext.hadoopConfiguration
+  test("geo compaction writes one file in z-key order of the bbox corner") {
+    // the z key per row, in file order: reading one parquet file with
+    // one split keeps its row order
+    def zKeys(dir: String): Seq[Long] = {
       val files = new java.io.File(dir).listFiles()
         .filter(_.getName.endsWith(".parquet"))
-      val areas = files.map { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), conf))
-        try {
-          def span(leaf: String): Double = {
-            val ss = r.getFooter.getBlocks.asScala.flatMap(
-              _.getColumns.asScala
-                .filter(_.getPath.toArray.toSeq == Seq("bbox", leaf))
-                .map(_.getStatistics))
-            ss.map(_.genericGetMax.asInstanceOf[Double]).max -
-              ss.map(_.genericGetMin.asInstanceOf[Double]).min
-          }
-          (span("ymax")) * (span("xmax"))
-        } finally r.close()
-      }
-      areas.sum / areas.length
+      assert(files.length == 1, s"expected 1 file in $dir, got ${files.length}")
+      spark.read.parquet(files.head.toString).coalesce(1)
+        .select(CompactOps.zKey.cast("long")).collect().map(_.getLong(0)).toSeq
     }
-    val hilOut = Files.createTempDirectory("graft-zgeo-hc").toString
-    CompactOps.compact(spark, in, hilOut, targetFiles = 6,
-      geoCurve = "hilbert")
-    val (zArea, hArea, hcArea) =
-      (meanFileArea(zOut), meanFileArea(hOut), meanFileArea(hilOut))
-    info(f"mean per-file bbox area: z $zArea%.5f / hilbert $hcArea%.5f " +
-      f"vs unsorted $hArea%.5f")
-    assert(zArea < hArea * 0.5,
-      f"z-layout compaction should at least halve per-file bbox area " +
-        f"($zArea%.5f vs $hArea%.5f)")
-    // the hilbert write path is wired and must land in the same tight
-    // regime vs unsorted. NOTE the curves' relative order at this
-    // granularity is NOT asserted: with only 6 coarse file chunks the
-    // mid-curve split points dominate and either curve can win (here z
-    // measured tighter); hilbert's jump-free advantage is a FINE-
-    // granularity property — layout_prune_stats asserts it at 128-row
-    // group granularity, where it holds.
-    assert(hcArea < hArea * 0.5,
-      f"hilbert compaction should also halve per-file bbox area " +
-        f"($hcArea%.5f vs $hArea%.5f)")
-    assert(spark.read.parquet(hilOut).count() == enriched.count())
-    // the z rewrite is still a faithful, geo-stamped compaction
-    assert(spark.read.parquet(zOut).count() == enriched.count())
-    val zFile = new java.io.File(zOut).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    assert(graft.ops.GeoParquetMeta.keyValueMeta(spark, zFile.toString)
+    def sorted(ks: Seq[Long]) = ks.zip(ks.drop(1)).forall { case (a, b) => a <= b }
+    val in = Files.createTempDirectory("graft-zgeo-in").toString
+    val out = Files.createTempDirectory("graft-zgeo-out").toString
+    enriched.coalesce(1).write.mode("overwrite").parquet(in)
+    val before = zKeys(in)
+    assert(before.distinct.size > 1 && !sorted(before),
+      "the input is already in z order; the test would show nothing")
+    CompactOps.compact(spark, in, out)
+    val after = zKeys(out)
+    assert(after.size == before.size)
+    assert(sorted(after), "compacted rows are not in z-key order")
+    assert(graft.ops.GeoParquetMeta.keyValueMeta(spark,
+      new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head.toString)
       .contains(graft.ops.GeoParquetMeta.GeoKey), "z output lost the geo footer")
   }
 

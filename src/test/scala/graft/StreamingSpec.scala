@@ -1347,33 +1347,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming parquet sink writes hive partitions exactly once") {
-    val out = Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val batch = spark.read.parquet(s"$feedDir/batch1")
-    val feed = IngestStream.readFeed(spark, batch.schema, s"$feedDir/*")
-    val q = IngestStream.writer(IngestStream.transform(feed), out, ckpt,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val back = spark.read.parquet(out)
-    assert(back.count() == 1000)
-    val partDirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName)
-    assert(partDirs.exists(_.startsWith("year=")))
-
-    // the geo format writes each file's footer before the sink log
-    // commits it: every file the log names carries `geo`
-    import graft.ops.GeoParquetMeta
-    val committed = spark.read.parquet(out).inputFiles
-    assert(committed.nonEmpty, "expected committed files in the sink log")
-    committed.foreach { f =>
-      assert(GeoParquetMeta.keyValueMeta(spark, f)
-        .contains(GeoParquetMeta.GeoKey), s"sink file without geo: $f")
-    }
-    // rows read through the sink log
-    assert(spark.read.parquet(out).count() == 1000)
-  }
-
   test("streaming flagship MV equals the batch schedule_deviation at end-of-stream") {
     import graft.streaming.FlagshipStream
     val dir = Files.createTempDirectory("graft-flagship-stream").toString

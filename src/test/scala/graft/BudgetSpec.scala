@@ -59,6 +59,42 @@ class BudgetSpec extends SparkSpec {
     assert(read == 0, s"readGtfsCsv ran $read jobs")
   }
 
+  test("job budget: one Gtfs.scheduleDeviation collect") {
+    val dir = Files.createTempDirectory("graft-budget-flagship").toFile
+    def csv(name: String, lines: String*): String = {
+      val f = new java.io.File(dir, s"$name.txt")
+      Files.write(f.toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      f.getPath
+    }
+    // stops at the pings of ids 0, 100 and 200 (trip_0, trip_2, trip_4),
+    // scheduled 10 s after them
+    val paths = Seq(
+      csv("routes", "route_id,route_type", "route_1,3"),
+      csv("trips", "route_id,trip_id" +: (0 until 7).map(t => s"route_1,trip_$t"): _*),
+      csv("stop_times", "trip_id,stop_id,stop_sequence,arrival_time",
+        "trip_0,S0,1,14:46:50", "trip_2,S1,1,14:48:30", "trip_4,S2,1,14:50:10"),
+      csv("stops", "stop_id,stop_lat,stop_lon", "S0,43.0,-79.7", "S1,43.1,-79.6",
+        "S2,43.2,-79.5"))
+    val lake = Files.createTempDirectory("graft-budget-flagship-lake").toString
+    IngestOps.writeHive(oneDay, lake)
+    val Seq(routes, trips, stopTimes, stops) =
+      paths.map(graft.ops.Gtfs.readGtfsCsv(spark, _))
+    // the notebook's `locations` view over the lake, as lake_day reads it
+    val positions = spark.read.parquet(lake)
+      .select(col("trip_id"), col("event_ts").as("timestamp"), col("geometry"))
+    var matched = 0L
+    val run = jobs {
+      matched = graft.ops.Gtfs.scheduleDeviation(routes, trips, stopTimes, stops, positions)
+        .collect().map(_.getAs[Long]("count")).sum
+    }
+    assert(matched == 3)
+    // four one-task jobs build the dims chain's broadcasts (its three
+    // joins' small sides and the chain itself); three run over the
+    // positions' 4 partitions, through the window's and the per-stop
+    // aggregate's shuffles to the result
+    assert(run == 7, s"one scheduleDeviation collect ran $run jobs")
+  }
+
   test("job budget: one poll trigger") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     import graft.streaming.{FeedGen, HttpFeedSource}

@@ -1,16 +1,21 @@
 package graft
 
 import java.nio.file.Files
+import java.time.{LocalDate, ZoneId}
 import graft.expr.StatsOps
-import graft.ops.Gtfs
-import org.apache.spark.sql.Row
+import graft.expr.{functions => gf}
+import graft.ops.{Gtfs, IngestOps}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 /** Golden pipeline test (SURVEY.md §5 item 4 / FIXTURES.md §2): a tiny
   * hand-computed GTFS fixture through the real-schema flagship query.
@@ -216,5 +221,170 @@ class GtfsGoldenSpec extends SparkSpec {
       assert(off == golden)
       assert(!offPlan.exists(_.isInstanceOf[BroadcastExchangeLike]), offPlan.mkString("\n"))
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the st_dwithin join condition computes no time of day") {
+    val (routes, trips, stopTimes, stops, positions) = fixture
+    val dev = Gtfs.scheduleDeviation(routes, trips, stopTimes, stops, positions,
+      timezone = "America/Toronto")
+    // the physical plan before adaptive execution, which may fold this
+    // fixture's empty Toronto-time join away
+    val plan = dev.queryExecution.sparkPlan
+    val conds = nodes(plan).collect {
+      case j: BaseJoinExec if j.condition.exists(_.toString.contains("dwithin")) =>
+        j.condition.get.toString
+    }
+    assert(conds.size == 1, plan)
+    for (f <- Seq("split(", "hour(", "from_utc_timestamp("))
+      assert(!conds.head.contains(f), s"$f in the join condition: ${conds.head}")
+    assert(dev.columns.toSeq == Seq("stop_id", "count", "avg_diff", "stddev_diff", "geom_hex"))
+  }
+
+  /** [[Gtfs.scheduleDeviation]] with both time-of-day terms computed per
+    * joined pair, in `diff` and so in the ±600 s condition pushed into the
+    * join: the form the per-row helper columns replace. */
+  private def perPair(routes: DataFrame, trips: DataFrame, stopTimes: DataFrame,
+      stops: DataFrame, positions: DataFrame, timezone: String): DataFrame = {
+    val dims = routes.filter(col("route_type").isin(700, 3))
+      .join(trips, "route_id")
+      .join(stopTimes.filter(!col("arrival_time").rlike("^(2[4-9]|3[0-5]):")), "trip_id")
+      .join(stops.withColumn("stop_loc", gf.st_point(col("stop_lon"), col("stop_lat"))),
+        "stop_id")
+    val joined = dims.join(positions, dims("trip_id") === positions("trip_id") &&
+      gf.st_dwithin(positions("geometry"), dims("stop_loc"), lit(0.0002)))
+    val w = Window.partitionBy(dims("trip_id"), col("stop_id"), col("arrival_time"),
+      col("stop_sequence")).orderBy(abs(col("diff")), col("diff"), positions("timestamp"))
+    joined
+      .withColumn("diff", (Gtfs.todSecondsTs(from_utc_timestamp(positions("timestamp"),
+        timezone)) - Gtfs.todSecondsStr(col("arrival_time"))).cast("long"))
+      .filter(col("diff").between(-600, 600))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .groupBy(col("stop_id"), col("stop_loc"))
+      .agg(count(col("diff")).as("count"), avg(col("diff")).as("avg_diff"),
+        stddev_samp(col("diff")).as("stddev_diff"))
+      .withColumn("geom_hex", gf.st_ashexwkb(col("stop_loc")))
+      .drop("stop_loc")
+  }
+
+  /** Stop coordinates of the generated fixtures. */
+  private val stopsAt = Map("S1" -> (43.65, -79.38), "S2" -> (43.66, -79.39),
+    "S3" -> (43.67, -79.40))
+
+  /** (trip_id, stop_id, stop_sequence, arrival_time) rows in every
+    * generated fixture: a one-digit hour with pings exactly ±600 s off (a
+    * tie on |diff|), a ±45 s tie plus a 601 s ping, a NULL and two
+    * malformed arrival times, and a next-day time. */
+  private val edgeStopTimes = Seq[(String, String, Int, String)](
+    ("T1", "S1", 1, "8:00:00"), ("T1", "S2", 2, "08:30:00"), ("T1", "S3", 3, null),
+    ("T1", "S3", 4, "08:4x:00"), ("T2", "S3", 5, "0845"), ("T2", "S1", 6, "9:05:30"),
+    ("T2", "S2", 7, "25:10:00"))
+
+  /** (stop_time index, offset s, near the stop) of the edge pings. */
+  private val edgePings = Seq((0, -600, true), (0, 600, true), (1, 45, true),
+    (1, -45, true), (1, 601, true), (2, 0, true), (3, 10, true), (4, 5, true),
+    (5, -600, true), (5, 30, false), (6, 0, true))
+
+  private val arrival: Gen[String] = Gen.frequency(
+    6 -> (for { h <- Gen.choose(0, 23); m <- Gen.choose(0, 59); s <- Gen.choose(0, 59)
+                wide <- Gen.oneOf(true, false) }
+      yield (if (wide) f"$h%02d" else h.toString) + f":$m%02d:$s%02d"),
+    1 -> Gen.oneOf("24:00:00", "7:6:5", "08:00", "", "ab:cd:ef"),
+    1 -> Gen.const(null: String))
+
+  /** (stop_times, pings as (stop_time index, offset s, near)) */
+  private val fixtureGen = for {
+    nSt <- Gen.choose(1, 12)
+    st <- Gen.listOfN(nSt, for {
+      trip <- Gen.oneOf("T1", "T2", "T3")
+      stop <- Gen.oneOf(stopsAt.keys.toSeq.sorted)
+      seq <- Gen.choose(10, 40)
+      a <- arrival
+    } yield (trip, stop, seq, a))
+    nP <- Gen.choose(0, 30)
+    pings <- Gen.listOfN(nP, for {
+      i <- Gen.choose(0, edgeStopTimes.size + nSt - 1)
+      d <- Gen.oneOf(Gen.choose(-700, 700), Gen.oneOf(-601, -600, 600, 601))
+      near <- Gen.frequency(5 -> true, 1 -> false)
+    } yield (i, d, near))
+  } yield (edgeStopTimes ++ st, edgePings ++ pings)
+
+  /** Seconds of day of a well-formed arrival time; any other time gets a
+    * fixed one, so its pings still land somewhere. */
+  private def arrivalSeconds(a: String): Int =
+    Option(a).map(_.split(":", -1)).filter(_.length == 3)
+      .flatMap(p => scala.util.Try(p(0).toInt * 3600 + p(1).toInt * 60 + p(2).toInt).toOption)
+      .getOrElse(8 * 3600)
+
+  test("time of day once per row equals the per-pair form (property)") {
+    import spark.implicits._
+    val routes = Seq(("R1", 3), ("R2", 700), ("R3", 1)).toDF("route_id", "route_type")
+    val trips = Seq(("T1", "R1"), ("T2", "R2"), ("T3", "R3")).toDF("trip_id", "route_id")
+    val stops = stopsAt.toSeq.map { case (id, (la, lo)) => (id, la, lo) }
+      .toDF("stop_id", "stop_lat", "stop_lon")
+    val day = LocalDate.of(2024, 3, 5)
+    var matched = 0L
+    for (tz <- Seq("America/Toronto", "Asia/Kolkata", "UTC")) {
+      val prop = Prop.forAllNoShrink(fixtureGen) { case (st, pings) =>
+        val stopTimes = st.toDF("trip_id", "stop_id", "stop_sequence", "arrival_time")
+        val positions = pings.map { case (i, d, near) =>
+          val (trip, stop, _, a) = st(i)
+          val (la, lo) = stopsAt(stop)
+          // the ping's instant: its wall-clock time of day in `tz`
+          val epoch = day.atStartOfDay(ZoneId.of(tz)).plusSeconds(arrivalSeconds(a) + d)
+            .toEpochSecond
+          (trip, epoch, lo + (if (near) 0.0001 else 0.01), la)
+        }.toDF("trip_id", "epoch", "lon", "lat")
+          .select(col("trip_id"), timestamp_seconds(col("epoch")).as("timestamp"),
+            gf.st_point(col("lon"), col("lat")).as("geometry"))
+        def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.getString(0))
+        val got = rows(Gtfs.scheduleDeviation(routes, trips, stopTimes, stops, positions,
+          timezone = tz))
+        val want = rows(perPair(routes, trips, stopTimes, stops, positions, tz))
+        matched += got.map(_.getLong(1)).sum
+        got.size == want.size && got.zip(want).forall { case (g, w) =>
+          g.getString(0) == w.getString(0) && g.getLong(1) == w.getLong(1) &&
+            g.getDouble(2) == w.getDouble(2) && g.getString(4) == w.getString(4) &&
+            (g.isNullAt(3) && w.isNullAt(3) ||
+              !g.isNullAt(3) && !w.isNullAt(3) && math.abs(g.getDouble(3) - w.getDouble(3)) <= 1e-9)
+        }
+      }
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(3)
+        .withInitialSeed(Seed(tz.hashCode.toLong)), prop)
+      assert(res.passed, s"$tz: ${res.status}")
+    }
+    assert(matched > 0, "no generated ping matched a stop; the property shows nothing")
+  }
+
+  test("flagship over a lake ingested in an agency timezone takes the default timezone") {
+    import spark.implicits._
+    // 07:59:30, 08:01:30 and 08:09:00 America/Toronto (EST, UTC-5), the
+    // golden fixture's pings, as the epochs a feed carries
+    val tor = ZoneId.of("America/Toronto")
+    def epoch(hms: String) =
+      java.time.LocalDateTime.parse(s"2024-03-05T$hms").atZone(tor).toEpochSecond
+    val decoded = Seq(("T1", epoch("07:59:30"), -79.38000, 43.65000),
+      ("T1", epoch("08:01:30"), -79.38005, 43.65005),
+      ("T1", epoch("08:09:00"), -79.39000, 43.66000))
+      .toDF("trip_id", "timestamp", "longitude", "latitude")
+    val lake = Files.createTempDirectory("graft-gtfs-tz-lake").toString
+    IngestOps.writeHive(IngestOps.enrich(decoded, timezone = "America/Toronto"), lake)
+    // the notebook's `locations` view over the lake, as lake_day reads it
+    val positions = spark.read.parquet(lake)
+      .select(col("trip_id"), col("event_ts").as("timestamp"), col("geometry"))
+    val (routes, trips, stopTimes, stops, _) = fixture
+    def run(tz: String) = Gtfs.scheduleDeviation(routes, trips, stopTimes, stops,
+      positions, timezone = tz).collect().map(r => r.getAs[String]("stop_id") -> r).toMap
+
+    // event_ts is already Toronto wall clock: the default timezone gives
+    // the golden deviations
+    val rows = run("UTC")
+    assert(rows.keySet == Set("S1", "S2"))
+    assert(rows("S1").getAs[Long]("count") == 2)
+    assert(rows("S1").getAs[Double]("avg_diff") == -30.0)
+    assert(rows("S2").getAs[Double]("avg_diff") == -60.0)
+    // the agency zone a second time shifts every ping 5 h back: nothing
+    // stays within ±600 s of its stop time
+    assert(run("America/Toronto").isEmpty)
   }
 }

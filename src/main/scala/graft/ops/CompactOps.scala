@@ -65,8 +65,10 @@ object CompactOps {
     }
   }
 
-  /** Quantization width of the geo z-layout key (10 bits per axis ≈
-    * 0.35°×0.18° cells — far finer than a row group at any real density). */
+  /** Quantization width of the geo z-layout key: 10 bits per axis over
+    * the whole globe, ≈ 0.35°×0.18° cells. A city-sized feed spans only a
+    * few cells (about 2 × 2 for a day of `lake_day`'s fleet), so within
+    * one city the key orders rows coarsely. */
   private val ZBits = 10
 
   /** Z-order key over the GeoParquet bbox corner: quantize lon/lat onto a

@@ -167,6 +167,7 @@ object CorpusOps {
     // is NULL-SAFE (<=>): a NULL source/lang stratum must match itself
     // across the two sides or it double-counts as novel AND missing
     val trainExp = obs.select(col("split").as("tsplit")).distinct()
+      // the train strata: ≤ 20 sources × 5 langs, collected above
       .crossJoin(broadcast(train.withColumnRenamed("source", "tsource")
         .withColumnRenamed("lang", "tlang")))
     obs.join(trainExp,
@@ -174,8 +175,8 @@ object CorpusOps {
           && col("lang") <=> col("tlang"), "full_outer")
       .select(coalesce(col("split"), col("tsplit")).as("split"),
         coalesce(col("o"), lit(0L)).as("o"), col("t"))
-      .join(broadcast(totals), "split")
-      .crossJoin(broadcast(ntr))
+      .join(broadcast(totals), "split") // 3 splits
+      .crossJoin(broadcast(ntr)) // 1-row train total
       .withColumn("contrib_fp", when(col("t").isNotNull && col("o") > 0, expr(
         """CAST(round(20000.0 * o * ln((CAST(o AS DOUBLE) * n_train)
              / (CAST(n_split AS DOUBLE) * t))) AS BIGINT)"""))
@@ -368,7 +369,7 @@ object CorpusOps {
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("tok"))
     tf.join(df, "tok")
-      .crossJoin(broadcast(nd))
+      .crossJoin(broadcast(nd)) // 1-row doc count
       .withColumn("score",
         col("tf") *
           round(log(col("n_docs").cast("double") / col("df")) * 10000)
@@ -680,10 +681,12 @@ object CorpusOps {
   private def lmScore(s: SparkSession, dir: String): DataFrame = {
     // Round-13 fusion (guide §2.3/§2.4): the bigram side rides ONE
     // kernel pass emitting per-doc DISTINCT (w1, w2, cnt) counts
-    // (TextHashOps.gramCounts2); one explicit repartition on (w1, w2) —
-    // filter-free on both branches, so the canonical subtrees stay
-    // identical — is shared by the lm-build aggregate AND the probe join
-    // (ReusedExchange). The explode formulation ran the bigram explode
+    // (TextHashOps.gramCounts2), repartitioned on (w1, w2) for the
+    // lm-build aggregate and the probe join. The final adaptive plan
+    // (ExplainMain, sf0.01) shows NO ReusedExchange: the lm branch prunes
+    // doc_id, so its subtree differs from the probe's and the kernel runs
+    // twice, once per branch; AQE then broadcasts the probe side g (a
+    // corpus-sized frame, under the threshold at sf0.01). The explode formulation ran the bigram explode
     // TWICE (lm build + probe), shuffled the per-OCCURRENCE probe stream
     // by (w1, w2), and re-shuffled the joined occurrence stream by w1
     // for the uni join; here lp is resolved per DISTINCT bigram on the
@@ -708,14 +711,14 @@ object CorpusOps {
       .select(col("doc_id"), col("g.w1").as("w1"), col("g.w2").as("w2"),
         col("g.cnt").as("cnt"))
       .repartition(col("w1"), col("w2")) // no explicit N: AQE-coalescible
-    val lm = g.groupBy("w1", "w2").agg(sum("cnt").as("c12")) // reuses g's exchange
+    val lm = g.groupBy("w1", "w2").agg(sum("cnt").as("c12"))
     val lp = lm.join(uni, Seq("w1"))
       .crossJoin(broadcast(v)) // 1-row vocab size
       .select(col("w1"), col("w2"),
         round(log((col("c12") + lit(1)).cast("double") /
           (col("c1") + col("vocab")).cast("double")) * LmScale)
           .cast("bigint").as("lp"))
-    g.join(lp, Seq("w1", "w2")) // probe side reuses g's exchange too
+    g.join(lp, Seq("w1", "w2"))
       .groupBy("doc_id")
       .agg(sum(col("cnt")).as("n_bigrams"),
         sum(col("lp") * col("cnt")).as("lp_sum"))
@@ -874,7 +877,7 @@ object CorpusOps {
           ((col("cs") + 1).cast("double") *
             (col("nt") + NBuckets).cast("double"))) * LmScale)
           .cast("bigint").as("w"))
-    val ds = g.join(broadcast(w), "b")
+    val ds = g.join(broadcast(w), "b") // ≤ NBuckets (256) weight rows
       .groupBy("doc_id")
       .agg(sum(col("cnt")).as("n_feats"),
         sum(col("w") * col("cnt")).as("imp_fixed"))
@@ -1022,7 +1025,7 @@ object CorpusOps {
     val rates = w.crossJoin(broadcast(tot)) // 1-row corpus-total side
       .select(col("source"),
         (col("weight") * col("tok_total") / col("n_tokens")).as("r"))
-    t(s, dir, "documents").join(broadcast(rates), "source")
+    t(s, dir, "documents").join(broadcast(rates), "source") // one row per source (20)
       .select(col("doc_id"), col("source"),
         (floor(col("r")).cast("long") +
           when(gf.fingerprint(col("text")) % 1000000L <

@@ -619,7 +619,7 @@ object DedupOps {
     val ev = sh.filter(col("doc_id") % EvalMod === 0)
       .select("shingle").distinct()
     sh.filter(col("doc_id") % EvalMod =!= 0)
-      .join(broadcast(ev), "shingle")
+      .join(ev, "shingle")
   }
 
   /** The matching DuckDB CTE chain (tk/sh/ex/ev/contam_rows), the single
@@ -929,7 +929,7 @@ object DedupOps {
       .select("source", "h")
     val srcs = sk.select("source").distinct()
     val pairs = srcs.select(col("source").as("a_src"))
-      .crossJoin(broadcast(srcs.select(col("source").as("b_src"))))
+      .crossJoin(broadcast(srcs.select(col("source").as("b_src")))) // 20 sources
       .filter(col("a_src") < col("b_src"))
     val u = pairs.join(sk.withColumnRenamed("source", "a_src"), "a_src")
       .select("a_src", "b_src", "h")
@@ -1313,9 +1313,9 @@ object DedupOps {
     val diag = pairCounts.filter(col("m1") === col("m2"))
       .select(col("m1").as("method"), col("both").as("nm"))
     pairCounts
-      .join(broadcast(diag.select(col("method").as("m1"),
+      .join(broadcast(diag.select(col("method").as("m1"), // 5 methods
         col("nm").as("n1"))), "m1")
-      .join(broadcast(diag.select(col("method").as("m2"),
+      .join(broadcast(diag.select(col("method").as("m2"), // 5 methods
         col("nm").as("n2"))), "m2")
       .select(col("m1"), col("m2"), col("n1"), col("n2"), col("both"),
         expr("""CAST(floor(CAST(both AS DOUBLE) * 1000000.0

@@ -9,17 +9,16 @@ import graft.Tables
   * (query-batch × full corpus) exist to anchor their bucketed production
   * twins' recall — they are correctness baselines, deliberately quadratic
   * (resp. unbucketed), and legitimate only at oracle/bench scale. Nothing
-  * used to stop a 100×-scale caller from executing them; this guard
-  * applies the same discipline as LinkOps.maybeBroadcast: a row-count
-  * check against a session conf. Above the threshold the anchor REFUSES
-  * loudly — it does NOT silently delegate to its approximate twin,
-  * because a caller asking for the exact anchor is asking for exact
-  * output, and swapping in approximate results behind the same name would
-  * corrupt any recall measurement built on it.
+  * used to stop a 100×-scale caller from executing them; this guard is a
+  * row-count check against a session conf. It is safety code, not a join
+  * strategy ([[BroadcastGuard]] decides broadcasts): above the threshold
+  * the anchor REFUSES loudly — it does NOT silently delegate to its
+  * approximate twin, because a caller asking for the exact anchor is
+  * asking for exact output, and swapping in approximate results behind
+  * the same name would corrupt any recall measurement built on it.
   *
-  * The count itself is one column-less scan, cached per dataset content
-  * (plain value, so safe across sessions unlike a cached DataFrame) —
-  * negligible next to the O(n²) work it gates.
+  * The count itself is one column-less scan per call, negligible next to
+  * the O(n²) work it gates.
   */
 private[graft] object ExactAnchorGuard {
 
@@ -31,15 +30,11 @@ private[graft] object ExactAnchorGuard {
     * corpus is orders of magnitude past it and belongs on the twins. */
   private[graft] val DefaultMaxRows = 100L * 1000
 
-  private val countCache = new ContentKey.Lru[Long](16)
-
   def check(s: SparkSession, dir: String, table: String,
       op: String, twin: String): Unit = {
     val limit = s.conf.getOption(MaxRowsKey).map(_.toLong)
       .getOrElse(DefaultMaxRows)
-    val rows = countCache.get(ContentKey.of(s, Seq(s"$dir/$table.parquet"))) {
-      Tables(s, dir, table).count()
-    }
+    val rows = Tables(s, dir, table).count()
     if (rows > limit)
       throw new IllegalStateException(
         s"$op is an exact correctness anchor with an unbucketed plan; " +

@@ -48,7 +48,7 @@ object Flagship {
         .cast("long").as("tod")) // F2
 
     e.join(o, e("user_id") === o("o_custkey")) // D1
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
+      .join(c, col("o_custkey") === col("c_custkey"))
       .join(l, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_partkey").as("stop_id"), col("l_orderkey"),
         col("l_linenumber"), col("event_id"),

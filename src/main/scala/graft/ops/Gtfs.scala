@@ -107,13 +107,12 @@ object Gtfs {
     * many agencies.
     *
     * Join layout: the positions (the fact side) stream across all tasks
-    * and the dims chain is broadcast to them, but only when `stopTimes`'
-    * size estimate is within the session's `autoBroadcastJoinThreshold`
-    * (a negative threshold disables it). The chain has at most as many
+    * and the dims chain is broadcast to them through [[BroadcastGuard]],
+    * bounded by `stopTimes`' size estimate. The chain has at most as many
     * rows as stop_times, since route, trip and stop ids are GTFS primary
     * keys; the planner's own estimate of the joined chain multiplies its
-    * inputs and cannot serve as the guard. Above the threshold the plan
-    * is left to the planner. */
+    * inputs and cannot serve as the bound. Above the threshold the chain
+    * is the build side of a shuffled hash join. */
   def scheduleDeviation(routes: DataFrame, trips: DataFrame,
       stopTimes: DataFrame, stops: DataFrame, positions: DataFrame,
       timezone: String = "UTC"): DataFrame = {
@@ -130,10 +129,7 @@ object Gtfs {
         "trip_id")
       .join(stops.withColumn("stop_loc",
         gf.st_point(col("stop_lon"), col("stop_lat"))), "stop_id") // F4
-    val threshold = stopTimes.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val dimsFit = threshold >= 0 &&
-      stopTimes.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
-    val dims = if (dimsFit) broadcast(chain) else chain
+    val dims = BroadcastGuard(chain, stopTimes.queryExecution.optimizedPlan.stats.sizeInBytes)
     val pings = positions.withColumn(PingTod,
       todSecondsTs(from_utc_timestamp(col("timestamp"), timezone)))
     val joined = dims.join(pings,

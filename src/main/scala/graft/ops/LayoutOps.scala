@@ -150,7 +150,7 @@ object LayoutOps {
           Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
         .select("b", "off")
-      keyed.join(broadcast(offs), "b")
+      keyed.join(broadcast(offs), "b") // ≤ 256 buckets: a 2×Bits key >> 12
         .withColumn("rn", row_number().over(
           Window.partitionBy("b").orderBy("k", "tie")).cast("long")
           + col("off") - 1L)
@@ -397,7 +397,7 @@ object LayoutOps {
         lit(java.sql.Date.valueOf("2024-01-30")))).as("d"))
       .filter(dayofmonth(col("d")) % 7 === 5) // days 5, 12, 19, 26
       .select(date_format(col("d"), "yyyy-MM-dd").as("day"))
-    lake.join(broadcast(busy), "day")
+    lake.join(broadcast(busy), "day") // 4 audit days
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         Num.dsum(col("value")).as("sum_value"))

@@ -34,9 +34,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per-iteration rank checkpoint (plans must not nest); ranks and
   * degrees are |V|-row frames — nothing driver-side but the |V| scalar
   * and the k-core/BPE-style convergence witnesses, no global sort. All
-  * |V|-row probe sides go through [[maybeBroadcast]]: broadcast below
-  * the row guard, the shuffled hash-join twin beyond it — the plan
-  * degrades instead of OOMing at extreme |V|.
+  * |V|-row probe sides go through [[BroadcastGuard.rows]] with the row
+  * count each site already holds (a loop witness or a checkpoint count,
+  * no extra action): broadcast while rows × the per-row size estimate
+  * fits Spark's autoBroadcastJoinThreshold, the shuffled hash-join twin
+  * beyond it — the plan degrades instead of OOMing at extreme |V|.
   *
   * Float discipline (pagerank): contributions are summed in whatever
   * partition order the shuffle lands, so both engines round each
@@ -49,27 +51,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object LinkOps {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables(s, dir, n)
-
-  // ---- broadcast size guard ----
-  // Every iterative op below probes a |V|-row frame (ranks, adjacency,
-  // alive set) per round. At bench |V| a broadcast is optimal; at extreme
-  // |V| (billions of vertices) a forced broadcast() would OOM the driver
-  // instead of degrading. The guard: each call site already has the
-  // frame's row count in hand (a loop witness or a checkpoint count — no
-  // extra action), so broadcast only below a row threshold and otherwise
-  // fall back to a shuffled hash join of the identical equi-join shape.
-  // The threshold is a session conf so tests can pin BOTH regimes.
-
-  private[graft] val BroadcastRowsKey = "graft.link.broadcastRows"
-  private[graft] val DefaultBroadcastRows = 8L * 1000 * 1000 // ~8M ids+payload ≲ driver budget
-
-  private def maybeBroadcast(s: SparkSession, df: DataFrame, rows: Long): DataFrame = {
-    val limit = s.conf.getOption(BroadcastRowsKey)
-      .map(_.toLong).getOrElse(DefaultBroadcastRows)
-    // fallback keeps the hash-join shape (no sorts of the big side) —
-    // the shuffled twin of the broadcast plan, not a sort-merge
-    if (rows <= limit) broadcast(df) else df.hint("shuffle_hash")
-  }
 
   // ---- fuzzy similarity join ----
 
@@ -346,7 +327,7 @@ object LinkOps {
   private[graft] def prUpdate(s: SparkSession, adj: DataFrame,
       parts: DataFrame, pr: DataFrame, nV: Long): DataFrame = {
     val nn = nV.toDouble
-    val contrib = adj.join(maybeBroadcast(s, pr, nV), adj("src") === pr("id"))
+    val contrib = adj.join(BroadcastGuard.rows(pr, nV), adj("src") === pr("id"))
       .select(explode(col("dsts")).as("id"),
         (col("pr") / col("outdeg")).as("c"))
       .groupBy("id").agg(sum(col("c")).as("c"))
@@ -475,11 +456,11 @@ object LinkOps {
     // exchange at all; beyond it the probe shuffles ONCE by t (bytes
     // ∝ Σ outdeg², the arboricity-bounded wedge volume) into a shuffled
     // hash join — measured at sf10 in SCALE.md §round-10.
-    // guard witness: adjacency has at most one row per oriented source, so
-    // the metadata-cheap checkpointed EDGE count bounds it from above —
-    // conservative in the safe direction (a graph whose edge count fits
-    // the broadcast budget has an adjacency that fits too; beyond it the
-    // identical plan runs as a shuffled hash join). Keeping the witness
+    // guard witness: adjacency has at most one row per oriented source and
+    // one array element per edge, so the metadata-cheap checkpointed EDGE
+    // count × adjT's per-row estimate (row header + jt + one element)
+    // bounds it from above — conservative in the safe direction; beyond
+    // it the identical plan runs as a shuffled hash join. Keeping the witness
     // free matters: a second localCheckpoint of the |V|-row array table
     // just to make its count cheap cost ~30% of the whole query.
     val eCount = o.count() // metadata read over the checkpointed blocks
@@ -489,7 +470,7 @@ object LinkOps {
     // allocation-free merge-count over the two sorted neighbor lists —
     // size(array_intersect(...)) built the intersection array + dedup set
     // per probed edge, the hot allocation at Σ outdeg² volume
-    val tri = probe.join(maybeBroadcast(s, adjT, eCount), "jt")
+    val tri = probe.join(BroadcastGuard.rows(adjT, eCount), "jt")
       .select(graft.expr.functions
         .sorted_intersect_count(col("n1"), col("n2")).as("k"))
       .agg(sum(col("k")).as("n_triangles"))
@@ -500,7 +481,7 @@ object LinkOps {
     val nodes = degO.agg(count(lit(1)).as("n_nodes"),
       sum(expr("d * (d - 1) DIV 2")).as("n_wedges"))
     val edges = o.agg(count(lit(1)).as("n_edges"))
-    nodes.crossJoin(broadcast(edges)).crossJoin(broadcast(tri))
+    nodes.crossJoin(broadcast(edges)).crossJoin(broadcast(tri)) // 1-row totals
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
         col("n_triangles"),
         round(lit(3.0) * col("n_triangles") / col("n_wedges"), 6)
@@ -572,9 +553,8 @@ object LinkOps {
   // scale: the margin-id cap and a collected-edge bound Σ_{m∈M} deg(m)
   // (an upper bound on edges incident to M, both observed during the
   // degree checkpoint's own job) must pass or the peel stays distributed.
-  // margin-id / collected-edge caps are session confs (BroadcastRowsKey
-  // discipline) so tests pin BOTH regimes — the endgame and the
-  // distributed peel it replaces
+  // the margin-id cap is a session conf so tests pin BOTH regimes — the
+  // endgame and the distributed peel it replaces
   private[graft] val KcoreLocalDelta = 64
   private[graft] val KcoreLocalMaxIdsKey = "graft.link.kcoreLocalMaxIds"
   private[graft] val KcoreLocalMaxIds = 20000L
@@ -673,8 +653,9 @@ object LinkOps {
       val margin = deg.filter(col("d") < kMargin)
         .select("id", "d").as[(Long, Long)].collect()
       val degLoc = scala.collection.mutable.HashMap.from(margin)
-      val muDF = broadcast(margin.map(_._1).toSeq.toDF("u"))
-      val mvDF = broadcast(margin.map(_._1).toSeq.toDF("v"))
+      // the margin passed the id cap: ≤ graft.link.kcoreLocalMaxIds rows each
+      val muDF = broadcast(margin.map(_._1).toSeq.toDF("u")) // margin ids
+      val mvDF = broadcast(margin.map(_._1).toSeq.toDF("v")) // margin ids
       val incidentStatic = und.join(muDF, Seq("u"), "left_semi")
         .unionAll(und.join(mvDF, Seq("v"), "left_semi")
           .join(muDF, Seq("u"), "left_anti").select("u", "v"))
@@ -690,10 +671,10 @@ object LinkOps {
         else {
           val removedSoFar = remFrames.reduce(_ unionAll _)
           incidentStatic
-            .join(maybeBroadcast(s,
+            .join(BroadcastGuard.rows(
               removedSoFar.select(col("id").as("u")), nRemovedAll),
               Seq("u"), "left_anti")
-            .join(maybeBroadcast(s,
+            .join(BroadcastGuard.rows(
               removedSoFar.select(col("id").as("v")), nRemovedAll),
               Seq("v"), "left_anti")
             .select("u", "v")
@@ -760,12 +741,12 @@ object LinkOps {
         nRemovedAll += nRemNow
         val removedAll = remFrames.reduce(_ unionAll _)
         // per-survivor degree loss from edges whose OTHER endpoint just left
-        val remU = maybeBroadcast(s, remNow.select(col("id").as("u")), nRemNow)
-        val remV = maybeBroadcast(s, remNow.select(col("id").as("v")), nRemNow)
+        val remU = BroadcastGuard.rows(remNow.select(col("id").as("u")), nRemNow)
+        val remV = BroadcastGuard.rows(remNow.select(col("id").as("v")), nRemNow)
         val touched = und.join(remU, Seq("u"), "left_semi").select(col("v").as("id"))
           .unionAll(und.join(remV, Seq("v"), "left_semi").select(col("u").as("id")))
         val delta = touched
-          .join(maybeBroadcast(s, removedAll, nRemovedAll), Seq("id"), "left_anti")
+          .join(BroadcastGuard.rows(removedAll, nRemovedAll), Seq("id"), "left_anti")
           .groupBy("id").agg(count(lit(1)).as("dl"))
         val (nextDeg, nNext, nM, mds) = timed(s"round $rounds (frontier $nRemNow)")(
           ckWithFrontier(
@@ -790,9 +771,9 @@ object LinkOps {
         val removedAll =
           if (anyDistributedRounds) unionAllRem.localCheckpoint()
           else unionAllRem
-        val remAllU = maybeBroadcast(s,
+        val remAllU = BroadcastGuard.rows(
           removedAll.select(col("id").as("u")), nRemovedAll)
-        val remAllV = maybeBroadcast(s,
+        val remAllV = BroadcastGuard.rows(
           removedAll.select(col("id").as("v")), nRemovedAll)
         und.join(remAllU, Seq("u"), "left_anti")
           .join(remAllV, Seq("v"), "left_anti")

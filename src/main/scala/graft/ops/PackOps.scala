@@ -124,7 +124,7 @@ object PackOps {
     val r = st.crossJoin(mn) // 1-row min: broadcast
       .select(col("lang"), col("n"),
         least(lit(100L), ceil(lit(100.0) * col("min_n") / col("n"))).as("rate_pct"))
-    d.join(broadcast(r), "lang")
+    d.join(broadcast(r), "lang") // one row per lang (5 in the corpus)
       .filter(gf.fingerprint(col("text")) % 100 < col("rate_pct"))
       .groupBy(col("lang"), col("n").as("n_total"), col("rate_pct"))
       .agg(count(lit(1)).as("n_sampled"))

@@ -41,15 +41,16 @@ object Relational {
        |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
   // D1: star-schema equi-join chain (reference: routes⋈trips⋈stop_times⋈stops)
-  // — small dims explicitly broadcast, as they would be at 100 TB.
+  // — the constant dims broadcast; supplier grows with the scale factor,
+  // so the planner decides its join from its size estimate.
   private def joinChain(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
     val sup = t(s, dir, "supplier")
     val nat = t(s, dir, "nation")
     val reg = t(s, dir, "region")
-    li.join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
-      .join(broadcast(nat), sup("s_nationkey") === nat("n_nationkey"))
-      .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
+    li.join(sup, li("l_suppkey") === sup("s_suppkey"))
+      .join(broadcast(nat), sup("s_nationkey") === nat("n_nationkey")) // 25 nations
+      .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey")) // 5 regions
       .groupBy("r_name", "n_name")
       .agg(
         count(lit(1)).as("n_items"),
@@ -307,7 +308,7 @@ object Relational {
       .agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"))
     val exact = li.groupBy("l_returnflag")
       .agg(countDistinct(col("l_partkey")).as("exact_parts"))
-    approx.join(broadcast(exact), "l_returnflag")
+    approx.join(broadcast(exact), "l_returnflag") // 3 return flags
       .select(col("l_returnflag"), col("approx_parts"), col("exact_parts"))
       .orderBy("l_returnflag")
   }

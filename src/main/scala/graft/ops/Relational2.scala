@@ -95,8 +95,8 @@ object Relational2 {
     val li = t(s, dir, "lineitem")
     val sup = t(s, dir, "supplier")
     val nat = t(s, dir, "nation")
-    li.join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
-      .join(broadcast(nat), sup("s_nationkey") === nat("n_nationkey"))
+    li.join(sup, li("l_suppkey") === sup("s_suppkey"))
+      .join(broadcast(nat), sup("s_nationkey") === nat("n_nationkey")) // 25 nations
       .select(col("n_name").as("nation"), col("l_returnflag").as("flag"),
         col("l_quantity"))
       .createOrReplaceTempView("graft_rollup_input")
@@ -399,7 +399,7 @@ object Relational2 {
   private def nullHandling(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "customer")
     val n = t(s, dir, "nation")
-    c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"), "left")
+    c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"), "left") // 25 nations
       .groupBy("n_name")
       .agg(
         count(lit(1)).as("n_rows"),

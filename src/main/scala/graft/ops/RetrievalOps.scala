@@ -261,7 +261,7 @@ object RetrievalOps {
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val contrib = withBm25Contrib(tf
-      .join(broadcast(df), "term")
+      .join(broadcast(df), "term") // ≤ |Bm25Query| (3) term rows
       .join(dl, "doc_id")
       .crossJoin(broadcast(corpus))) // 1-row (nd, avgdl) side
     val w = Window.orderBy(col("score_fp").desc, col("doc_id"))
@@ -352,7 +352,7 @@ object RetrievalOps {
       .groupBy("term", "doc_id", "chunk_id").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val contrib = withBm25Contrib(tf
-      .join(broadcast(df), "term")
+      .join(broadcast(df), "term") // ≤ |Bm25Query| (3) term rows
       .join(dl, Seq("doc_id", "chunk_id"))
       .crossJoin(broadcast(corpus))) // 1-row (nd, avgdl) side
     val w = Window.orderBy(col("score_fp").desc, col("doc_id"),
@@ -485,15 +485,16 @@ object RetrievalOps {
     // here measured WORSE in the r12 A/B (its job barrier + block write
     // outweigh AQE's stage reuse of the identical exchanges) — left lazy.
     val tf = tokens
+      // qt: ≤ NQueries × HybridQTerms rows, and so are tf's terms and df
       .join(broadcast(qt.select("term").distinct()), Seq("term"), "left_semi")
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val wl = Window.partitionBy("q_id")
       .orderBy(col("score_fp").desc, col("id"))
     val lex = withBm25Contrib(tf
-      .join(broadcast(qt), "term")
+      .join(broadcast(qt), "term") // ≤ NQueries × HybridQTerms rows
       .filter(col("doc_id") =!= col("q_id"))
-      .join(broadcast(df), "term")
+      .join(broadcast(df), "term") // ≤ |Bm25Query| (3) term rows
       .join(dl, "doc_id")
       .crossJoin(broadcast(corpus))) // 1-row (nd, avgdl) side
       .groupBy(col("q_id"), col("doc_id").as("id"))
@@ -512,7 +513,7 @@ object RetrievalOps {
     val wv = Window.partitionBy("q_id")
       .orderBy(col("cos_sim").desc, col("c_id"))
     val vec = SimilarityOps.ivfCandidates(s, dir)
-      .join(broadcast(q), "q_id")
+      .join(broadcast(q), "q_id") // ≤ NQueries (8) query rows
       .join(c, "c_id")
       .select(col("q_id"), col("c_id"),
         (vdot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))

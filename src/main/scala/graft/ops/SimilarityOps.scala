@@ -45,7 +45,7 @@ object SimilarityOps {
         col("norm").as("q_norm"))
     val c = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
       col("norm").as("c_norm"))
-    pairs.join(broadcast(q), "q_id")
+    pairs.join(broadcast(q), "q_id") // ≤ NQueries (8) query rows
       .join(c, "c_id")
       .select(col("q_id"), col("c_id"),
         (vdot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
@@ -714,7 +714,7 @@ object SimilarityOps {
       .select(col("vec_id").as("q_id"), col("label").as("q_label"))
     val clab = lab.select(col("vec_id").as("c_id"), col("label").as("c_label"))
     val cand = ivfCandidates(s, dir)
-      .join(broadcast(qlab), "q_id")
+      .join(broadcast(qlab), "q_id") // ≤ NQueries (8) query rows
       .join(clab, "c_id")
       .filter(col("c_label") === col("q_label"))
       .select("q_id", "c_id")
@@ -799,7 +799,7 @@ object SimilarityOps {
     // frame instead of the candidate join (one embeddings pass, like every
     // IVF variant's rankPairs tail)
     val rel = ContentKey.persistForOracle(s, dir, "mmr_rel",
-      cand.join(broadcast(q), "q_id").join(c, "c_id")
+      cand.join(broadcast(q), "q_id").join(c, "c_id") // ≤ NQueries (8) query rows
         .select(col("q_id"), col("c_id"),
           (vdot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
             .as("rel"))
@@ -1210,7 +1210,7 @@ object SimilarityOps {
       .filter(col("q_id") =!= col("c_id"))
       // raw-PQ codes are cell-independent, so distinct pairs keep codes
       .select("q_id", "c_id", "codes").distinct()
-      .join(broadcast(queryVecs(e)), "q_id")
+      .join(broadcast(queryVecs(e)), "q_id") // ≤ NQueries (8) query rows
       .select(col("q_id"), col("c_id"),
         gf.pq_adc_cos(col("q_emb"), col("codes"), bLit,
           lit(dim), lit(PqM), lit(PqKs)).as("adc"))
@@ -1388,7 +1388,7 @@ object SimilarityOps {
     val shortlist = probedCells(s, dir).join(idx, "cell")
       .filter(col("q_id") =!= col("c_id"))
       .select("q_id", "c_id", "codes").distinct() // codes cell-independent
-      .join(broadcast(queryVecs(e)), "q_id")
+      .join(broadcast(queryVecs(e)), "q_id") // ≤ NQueries (8) query rows
       .select(col("q_id"), col("c_id"),
         gf.pq_adc_cos_rot(col("q_emb"), col("codes"), rLit, bLit,
           lit(dim), lit(PqM), lit(PqKs)).as("adc"))
@@ -1469,7 +1469,7 @@ object SimilarityOps {
       .orderBy(col("adc").desc, col("c_id"))
     val shortlist = probedCells(s, dir).join(idx, "cell")
       .filter(col("q_id") =!= col("c_id"))
-      .join(broadcast(queryVecs(e)), "q_id")
+      .join(broadcast(queryVecs(e)), "q_id") // ≤ NQueries (8) query rows
       .select(col("q_id"), col("c_id"),
         gf.pq_adc_cos_res(col("q_emb"), col("cell"), col("codes"), cLit, bLit,
           lit(dim), lit(PqM), lit(PqKs)).as("adc"))
@@ -1555,7 +1555,7 @@ object SimilarityOps {
     val cent = centroidOf(e, "label")
     val members = e.select(col("label"), col("vec_id"), col("embedding"),
       sqrt(vdot(col("embedding"), col("embedding"))).as("norm"))
-    members.join(broadcast(cent), "label")
+    members.join(broadcast(cent), "label") // one row per label (10 in the corpus)
       .select(col("label"), col("cnorm"),
         (gf.vec_dot_fd(col("embedding"), col("centroid")) /
           (col("norm") * col("cnorm"))).as("cos"))
@@ -2093,7 +2093,7 @@ object SimilarityOps {
   private def embedPca(s: SparkSession, dir: String): DataFrame = {
     val model = fitPcaModel(s, dir)
     t(s, dir, "embeddings")
-      .crossJoin(broadcast(model)) // P-row whitening model side
+      .crossJoin(broadcast(model)) // PcaP (8) rows: the whitening model
       .select(col("vec_id"), col("comp"),
         round(gf.vec_dot_fd(col("embedding"), col("w")) - col("b"), 6)
           .as("value"))
@@ -2191,7 +2191,7 @@ object SimilarityOps {
       .groupBy("index_type")
       .agg(count(lit(1)).as("returned"),
         sum(coalesce(col("hit"), lit(0L))).as("hits"))
-      .crossJoin(broadcast(possible))
+      .crossJoin(broadcast(possible)) // 1-row denominator
       .select(col("index_type"), col("returned"), col("hits"),
         col("possible"),
         expr("(hits * 1000000) div possible").as("recall_ppm"))

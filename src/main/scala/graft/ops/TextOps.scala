@@ -210,7 +210,7 @@ object TextOps {
     val a = uni.select(col("tok").as("w1"), col("c1").as("c_w1"))
     val b = uni.select(col("tok").as("w2"), col("c1").as("c_w2"))
     pairs.join(a, "w1").join(b, "w2")
-      .crossJoin(broadcast(n))
+      .crossJoin(broadcast(n)) // 1-row token total
       .withColumn("pmi_fp",
         round(log(col("c12").cast("double") * col("n_tok") /
           (col("c_w1") * col("c_w2"))) * 10000).cast("bigint"))

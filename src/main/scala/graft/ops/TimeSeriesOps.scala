@@ -113,7 +113,7 @@ object TimeSeriesOps {
     // the LARGEST double in Spark but is skipped by DuckDB's max — an
     // engine divergence — and ANSI mode could reject the division outright
     val zs = when(sd > 0, (col("value").cast("double") - mean) / sd)
-    e.join(broadcast(st), "event_type")
+    e.join(broadcast(st), "event_type") // one row per event type (5)
       .select(col("event_type"), zs.as("zs"))
       .groupBy("event_type")
       .agg(
@@ -314,7 +314,7 @@ object TimeSeriesOps {
   private def valueHistogram(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events")
     val bounds = e.agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
-    e.crossJoin(broadcast(bounds))
+    e.crossJoin(broadcast(bounds)) // 1-row min/max
       .select(col("event_type"),
         when(col("hi") === col("lo"), lit(0L))
           .otherwise(least(

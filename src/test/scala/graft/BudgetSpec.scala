@@ -95,6 +95,18 @@ class BudgetSpec extends SparkSpec {
     assert(run == 7, s"one scheduleDeviation collect ran $run jobs")
   }
 
+  test("job budget: one FlagshipStream.applyBatch trigger") {
+    import graft.streaming.FlagshipStream
+    val stateDir = Files.createTempDirectory("graft-budget-mv").toString
+    val events = Tables(spark, sf0001, "events")
+    // batch 0 publishes the first version; batch 1 is a steady-state
+    // trigger: read the base, fold the batch's candidates, publish
+    FlagshipStream.applyBatch(events.filter(col("event_id") % 2 === 0), 0, sf0001, stateDir)
+    val trigger = jobs(FlagshipStream.applyBatch(
+      events.filter(col("event_id") % 2 === 1), 1, sf0001, stateDir))
+    assert(trigger == 9, s"one applyBatch trigger ran $trigger jobs")
+  }
+
   test("job budget: one poll trigger") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     import graft.streaming.{FeedGen, HttpFeedSource}

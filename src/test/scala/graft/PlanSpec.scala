@@ -154,16 +154,15 @@ class PlanSpec extends SparkSpec {
     assert(below.contains("BroadcastHashJoin"),
       s"pagerank step lost its below-guard broadcast:\n$below")
     // the 100 TB regime: |V| beyond the broadcast budget. Model it by
-    // forcing the guard to -1 rows (even an empty frame must not
-    // broadcast — kcore's alive set genuinely peels to 0 rows at
-    // sf0.001) and disabling Catalyst's own auto-broadcast, which would
-    // otherwise re-broadcast the tiny test frames on size estimates —
+    // disabling Spark's auto-broadcast threshold, the guard's only bound
+    // (even an empty frame must not broadcast — kcore's alive set
+    // genuinely peels to 0 rows at sf0.001), which also stops Catalyst
+    // re-broadcasting the tiny test frames on size estimates —
     // every |V|-row probe must keep its equi-join shape as a shuffled
     // hash join, with no broadcast hash exchange and no degeneration
     // into a cartesian product. (The 1-row bounds/totals broadcast cross
     // joins in triangle_count are exempt — they are the documented
     // oneRowBounds anchors, not |V|-row probes.)
-    spark.conf.set(graft.ops.LinkOps.BroadcastRowsKey, "-1")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val above = prPlan
@@ -181,9 +180,56 @@ class PlanSpec extends SparkSpec {
           s"$q degenerated above the size guard:\n$p")
       }
     } finally {
-      spark.conf.unset(graft.ops.LinkOps.BroadcastRowsKey)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
+  }
+
+  test("catalog-wide: a hinted broadcast side does not grow with the scale factor") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    // With both thresholds at -1 only hand-placed hints broadcast. Each
+    // BroadcastExchange of a query's final plan is keyed by its columns
+    // and read for the rows it collected, at sf0.001 and at sf0.01 (10×
+    // the TPC-H tables and events; the corpus tables are the same size).
+    // A side that has more rows at sf0.01 is data-sized and fails, unless
+    // it is listed here with the constant bound its hint names.
+    val bounded = Map(
+      // offsets per 4096-key bucket of a 20-bit curve key
+      ("layout_prune_stats", "b,off") -> 256L)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _: ReusedExchangeExec => Nil // counted where it first ran
+      case o => (o +: o.children.flatMap(nodes)) ++ o.subqueries.flatMap(nodes)
+    }
+    def broadcasts(df: org.apache.spark.sql.DataFrame) =
+      nodes(df.queryExecution.executedPlan).collect { case b: BroadcastExchangeExec => b }
+    // (side's columns -> rows) over the final plan, once the query ran
+    def sides(df: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+      df.queryExecution.toRdd.foreach(_ => ())
+      broadcasts(df).map(b => b.output.map(_.name).mkString(",") ->
+        b.metrics("numOutputRows").value).groupMapReduce(_._1)(_._2)(math.max)
+    }
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try {
+      val sf001 = "/root/testdata/sf0.01"
+      val grown = for {
+        (name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
+        small = fn(spark, sf0001)
+        if broadcasts(small).nonEmpty
+        atSmall = sides(small)
+        (side, rows) <- sides(fn(spark, sf001))
+        before = atSmall.getOrElse(side, 0L)
+        bound = bounded.get((name, side))
+        if bound.fold(rows > before)(b => (rows max before) > b)
+      } yield s"$name [$side]: $before -> $rows rows" +
+        bound.fold("")(b => s" (bound $b)")
+      assert(grown.isEmpty, grown.mkString("data-sized broadcast sides:\n", "\n", ""))
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("dpp join: the lake scan carries a dynamic-pruning partition filter") {
